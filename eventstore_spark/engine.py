@@ -17,6 +17,7 @@ import os
 import shutil
 from dataclasses import dataclass
 from datetime import datetime, timezone
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,6 +63,12 @@ class _ManagedProjection:
     last_result: ProjectionResult | None = None
     runs: int = 0
     query: object = None  # StreamingQuery when continuous
+
+
+def _stream_ids(df: DataFrame) -> list[str]:
+    """The distinct ``stream_id`` values of ``df``, capped at 10,001 (one
+    over the emitted-streams tracker's cap)."""
+    return [r[0] for r in df.select("stream_id").distinct().limit(10_001).collect()]
 
 
 class EventStoreEngine:
@@ -1214,9 +1221,9 @@ class EventStoreEngine:
         def sink(batch_df, batch_id):
             batch_df.persist()
             try:
+                head = batch_df.agg(F.max("log_position")).first()[0]
                 self.writer.append_df(
                     sysproj.system_link_rows(batch_df, corr_path))
-                head = batch_df.agg(F.max("log_position")).first()[0]
             finally:
                 batch_df.unpersist()
             if head is not None:
@@ -1332,7 +1339,7 @@ class EventStoreEngine:
                                        "_checkpoint_id"))
             except FileNotFoundError:
                 pass
-            mp.last_result = None
+            self._release_result(mp)
             mp.runs = 0
         mp.spec = spec
         if emit_enabled is not None:  # UpdateReq.Options.emit_enabled
@@ -1379,7 +1386,7 @@ class EventStoreEngine:
             mp.query = None
 
     def reset_projection(self, name: str) -> None:
-        self.projections[name].last_result = None
+        self._release_result(self.projections[name])
         self.projections[name].runs = 0
         self._drop_projection_state(name)
 
@@ -1394,7 +1401,7 @@ class EventStoreEngine:
         (the events stay in the log until scavenge, exactly like the
         reference's delete-then-scavenge flow)."""
         self.disable_projection(name)
-        del self.projections[name]
+        self._release_result(self.projections.pop(name))
         if not self.writer.read_only:
             self.writer.append("$projections-$all", [ProposedEvent(
                 "$ProjectionDeleted", json.dumps({"name": name}),
@@ -1431,19 +1438,16 @@ class EventStoreEngine:
         except (FileNotFoundError, ValueError):
             return []
 
-    def _record_emitted_streams(self, name: str, emitted: DataFrame) -> None:
+    def _record_emitted_streams(self, name: str, sids: list[str]) -> None:
         """Track which streams a projection has emitted into — the analog
         of the reference's `$projections-<name>-emittedstreams` stream
         (EmittedStreamsTracker.cs), consulted by
-        delete_projection(delete_emitted_streams=True). One tiny distinct
-        over the emission batch; the set is merged into a JSON beside the
-        projection's state (capped — a projection emitting into unbounded
-        distinct streams records the cap and deletion falls back to the
-        recorded subset, as the reference's tracker batches do)."""
-        sids = [
-            r[0]
-            for r in emitted.select("stream_id").distinct().limit(10_001).collect()
-        ]
+        delete_projection(delete_emitted_streams=True). ``sids`` is the
+        emission batch's stream set (``_stream_ids``); it is merged into a
+        JSON beside the projection's state (capped — a projection emitting
+        into unbounded distinct streams records the cap and deletion falls
+        back to the recorded subset, as the reference's tracker batches
+        do)."""
         if not sids:
             return
         merged = set(self._emitted_streams(name)) | set(sids)
@@ -1459,7 +1463,17 @@ class EventStoreEngine:
 
     def run_projection(self, name: str, checkpoint_dir: str | None = None):
         """Run a managed projection: onetime/transient → batch result;
-        continuous → start the streaming query into the state sink."""
+        continuous → start the streaming query into the state sink.
+
+        A onetime/transient run folds its source once and appends all of
+        its output — emitted/linked events, ``outputState`` results and
+        the checkpoint/partitions/order bookkeeping rows — in ONE
+        ``append_df`` commit. The returned ``ProjectionResult`` is a
+        SNAPSHOT of that fold, held in executor memory: reading it never
+        re-runs the fold, and it is freed (later reads fail) by the
+        projection's next run, ``reset_projection``,
+        ``update_projection(reset=True)``, ``delete_projection`` and
+        ``close``. A faulted or failed run keeps nothing."""
         mp = self.projections[name]
         if not mp.enabled:
             raise RuntimeError(f"projection '{name}' is disabled")
@@ -1495,9 +1509,10 @@ class EventStoreEngine:
                 # (an LSM delta; the reference persists partition state via
                 # ProjectionCheckpoint.cs:19,83 + DefaultCheckpointManager).
                 # `mode("overwrite")` on the generation dir makes a replayed
-                # micro-batch (restart from checkpoint) idempotent. Nothing
-                # is ever collect()ed to the driver, so a foreachStream
-                # projection over millions of streams stays executor-bound.
+                # micro-batch (restart from checkpoint) idempotent. Only the
+                # emitted stream set (capped) is collect()ed to the driver,
+                # so a foreachStream projection over millions of streams
+                # stays executor-bound.
                 batch_df.persist()
                 try:
                     emissions = (
@@ -1511,7 +1526,10 @@ class EventStoreEngine:
                             "source_log_position", "emit_seq",
                         )
                     )
-                    if not mp.emit_enabled and emissions.limit(1).first():
+                    # the batch's emitted streams, read once before any
+                    # write: a batch that emitted nothing skips append_df
+                    sids = _stream_ids(emissions)
+                    if sids and not mp.emit_enabled:
                         # projections.proto emit_enabled: emitting while
                         # disabled FAULTS the projection (the reference
                         # faults the query; here the streaming query dies
@@ -1520,8 +1538,9 @@ class EventStoreEngine:
                             f"projection '{name}' called emit/linkTo but "
                             "was created with emit_enabled=False"
                         )
-                    self.writer.append_df(emissions)
-                    self._record_emitted_streams(name, emissions)
+                    if sids:
+                        self.writer.append_df(emissions)
+                        self._record_emitted_streams(name, sids)
                     (
                         batch_df.where(F.col("kind") == "state")
                         .select("partition", "state", "source_log_position")
@@ -1540,67 +1559,67 @@ class EventStoreEngine:
         # handlers fire for deleted partitions (the reference's
         # projection reader sees $all pre-visibility; tombstones and
         # soft-delete metastream writes become partition-deleted
-        # notifications — StreamDeletedHelper.cs:35-63)
-        mp.last_result = run_batch(mp.spec, self._link_source_events())
-        if not mp.emit_enabled and mp.last_result.emitted.limit(1).first():
-            mp.last_result = None  # faulted — nothing persisted
-            raise RuntimeError(
-                f"projection '{name}' called emit/linkTo but was created "
-                "with emit_enabled=False (projections.proto emit_enabled)"
-            )
-        # emitted events append back to the log with deterministic ids
-        # full emitted shape: source_log_position/emit_seq keep emitted
-        # streams numbered in fold order (reference appends in order)
-        self.writer.append_df(mp.last_result.emitted)
-        self._record_emitted_streams(name, mp.last_result.emitted)
-        # P12/P13 result-stream parity: outputState()/outputTo() materialize
-        # the final states as Result events in `$projections-<name>-result`
-        # (or the outputTo override) so `read_stream("$projections-…-result")`
-        # works like the reference (ResultEventEmitter.cs:10-25).
-        if mp.spec.output_state_:
-            results = mp.last_result.result_events(
-                name, mp.spec.result_stream_name,
-                getattr(mp.spec, "partition_result_pattern", None),
-            )
-            self.writer.append_df(results)
-            self._record_emitted_streams(name, results)
-        # U8 parity: checkpoint stream `$projections-<name>-checkpoint`
-        # records the position this run processed up to (the reference
-        # persists CheckpointTags there, ProjectionCheckpoint.cs:19,83;
-        # DefaultCheckpointManager). The position is the head of the
-        # projection's SOURCE feed (CheckpointTag tracks the reader's
-        # position, not the whole log) — so the checkpoint append itself
-        # never advances it, and re-running with no new source events is
-        # idempotent via the deterministic per-position event id.
-        from .plans.reader_strategy import source_predicate
+        # notifications — StreamDeletedHelper.cs:35-63). The fold runs
+        # ONCE: every output and the caller's reads come from its snapshot.
+        self._release_result(mp)
+        res = run_batch(mp.spec, self._link_source_events()).snapshot()
+        try:
+            # emitted events append back to the log with deterministic ids;
+            # source_log_position/emit_seq keep emitted streams numbered in
+            # fold order (reference appends in order)
+            emitted = res.emitted.drop("partition")
+            sids = _stream_ids(emitted)
+            if sids and not mp.emit_enabled:
+                raise RuntimeError(
+                    f"projection '{name}' called emit/linkTo but was created "
+                    "with emit_enabled=False (projections.proto emit_enabled)"
+                )
+            outputs = [emitted]
+            # P12/P13 result-stream parity: outputState()/outputTo()
+            # materialize the final states as Result events in
+            # `$projections-<name>-result` (or the outputTo override) so
+            # `read_stream("$projections-…-result")` works like the
+            # reference (ResultEventEmitter.cs:10-25).
+            if mp.spec.output_state_:
+                results = res.result_events(
+                    name, mp.spec.result_stream_name,
+                    getattr(mp.spec, "partition_result_pattern", None),
+                )
+                sids += _stream_ids(results)
+                outputs.append(results)
+            # one append = one commit: a crash leaves all of the run's
+            # outputs or none. Per-stream numbering is unchanged — each
+            # stream's rows come from one of these sources.
+            outputs += self._projection_bookkeeping(name, mp.spec, res)
+            self.writer.append_df(reduce(
+                lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                outputs,
+            ))
+            self._record_emitted_streams(name, sids)
+        except BaseException:
+            res.release()  # faulted or failed — keep nothing materialized
+            raise
+        mp.last_result = res
+        return res
 
-        last_pos = (
-            self.events()
-            .where(source_predicate(mp.spec))
-            .agg(F.max("log_position"))
-            .first()[0]
-            or 0
-        )
-        self.writer.append_df(
-            self.spark.createDataFrame(
-                [(
-                    f"$projections-{name}-checkpoint",
-                    "$ProjectionCheckpoint",
-                    json.dumps({"lastPosition": int(last_pos)}),
-                    None,
-                    f"ckpt-{name}-{int(last_pos)}",
-                )],
-                "stream_id string, event_type string, data string, "
-                "metadata string, event_id string",
-            )
-        )
-        self._write_projection_bookkeeping(name, mp)
-        return mp.last_result
+    def _release_result(self, mp) -> None:
+        """Free a onetime projection's fold snapshot (run_projection)."""
+        res, mp.last_result = mp.last_result, None
+        if res is not None:
+            res.release()
 
-    def _write_projection_bookkeeping(self, name: str, mp) -> None:
-        """streams.md bookkeeping-stream parity (streams.md:243-265,
-        r13): after a batch run,
+    def _projection_bookkeeping(self, name: str, spec: Projection,
+                                res: ProjectionResult) -> list[DataFrame]:
+        """The bookkeeping rows a batch run appends beside its output
+        (streams.md bookkeeping-stream parity, streams.md:243-265, r13):
 
+        * ``$projections-<name>-checkpoint`` (U8 parity) — the position
+          this run processed up to (the reference persists CheckpointTags
+          there, ProjectionCheckpoint.cs:19,83; DefaultCheckpointManager).
+          The position is the head of the projection's SOURCE feed
+          (CheckpointTag tracks the reader's position, not the whole log),
+          so re-running with no new source events is idempotent via the
+          deterministic per-position event id.
         * ``$projections-<name>-partitions`` — one ``$partition`` event
           per partition of a PARTITIONED projection (partitionBy /
           foreachStream). Deterministic per-partition event ids make
@@ -1618,20 +1637,36 @@ class EventStoreEngine:
         from .plans.reader_strategy import source_predicate
         from .projections.dsl import validate_reorder
 
-        spec = mp.spec
+        last_pos = (
+            self.events()
+            .where(source_predicate(spec))
+            .agg(F.max("log_position"))
+            .first()[0]
+            or 0
+        )
+        rows = [self.spark.createDataFrame(
+            [(
+                f"$projections-{name}-checkpoint",
+                "$ProjectionCheckpoint",
+                json.dumps({"lastPosition": int(last_pos)}),
+                None,
+                f"ckpt-{name}-{int(last_pos)}",
+            )],
+            "stream_id string, event_type string, data string, "
+            "metadata string, event_id string",
+        )]
         if (spec.by_stream or spec.partition_col is not None
                 or getattr(spec, "partition_fn", None) is not None):
-            parts = mp.last_result.states.select(
+            rows.append(res.states.select(
                 F.lit(f"$projections-{name}-partitions").alias("stream_id"),
                 F.lit("$partition").alias("event_type"),
                 F.col("partition").alias("data"),
                 F.lit(None).cast("string").alias("metadata"),
                 F.concat_ws("-", F.lit("prt"), F.lit(name),
                             F.col("partition")).alias("event_id"),
-            )
-            self.writer.append_df(parts)
+            ))
         if validate_reorder(spec):
-            links = self.events().where(source_predicate(spec)).select(
+            rows.append(self.events().where(source_predicate(spec)).select(
                 F.lit(f"$projections-{name}-order").alias("stream_id"),
                 F.lit("$>").alias("event_type"),
                 F.concat_ws("@", F.col("event_number").cast("string"),
@@ -1643,8 +1678,8 @@ class EventStoreEngine:
                 F.unix_micros(F.col("created"))
                 .alias("source_log_position"),
                 F.col("log_position").alias("emit_seq"),
-            )
-            self.writer.append_df(links)
+            ))
+        return rows
 
     def _projection_state_dir(self, name: str) -> str:
         # underscore prefix → invisible to Spark's file listing of the log
@@ -2180,7 +2215,8 @@ class EventStoreEngine:
         directory (writer fencing, round-5). Reads keep working; the next
         append requires a fresh engine/writer, which re-acquires the
         lock. The auto-run system-projection query (if any) stops first —
-        its sink appends through this writer."""
+        its sink appends through this writer. Onetime projection snapshots
+        are freed (``projection_state`` then reports "has not run")."""
         q = self._system_links_query
         if q is not None:
             self._system_links_query = None
@@ -2189,7 +2225,11 @@ class EventStoreEngine:
                     q.stop()
             except Exception:
                 pass
-        self.writer.close()
+        try:
+            for mp in self.projections.values():
+                self._release_result(mp)
+        finally:
+            self.writer.close()
 
     # ------------------------------------------------------------------ SQL
     @classmethod
@@ -2215,7 +2255,10 @@ class EventStoreEngine:
         ``<prefix>_metadata`` (stream metadata incl. tombstones), plus one
         ``<prefix>_proj_<name>`` per projection that has run. Returns the
         registered names. Views are lazy — each query re-plans against the
-        current log state, with pruning/pushdown intact.
+        current log state, with pruning/pushdown intact — except a onetime
+        projection's view, which reads that run's snapshot
+        (``run_projection``): register again after the projection's next
+        run, which frees it.
 
         Time travel (round-5): ``<prefix>_manifest_history`` lists the
         available manifest generations (generation, files, published_at),

@@ -374,6 +374,22 @@ class ProjectionResult:
 
     raw: DataFrame  # all output rows (kind = state | emit | link)
 
+    def snapshot(self) -> "ProjectionResult":
+        """Run the fold once and pin its rows with an eager
+        localCheckpoint, so every later read of the result reads them
+        instead of re-running the fold. ``persist()`` would not survive:
+        any DataFrame write into the store directory makes Spark re-cache
+        every plan that scans it (``recacheByPath``), which drops the
+        cached fold. Free the rows with :meth:`release`."""
+        return ProjectionResult(raw=self.raw.localCheckpoint(eager=True))
+
+    def release(self) -> None:
+        """Free the rows a :meth:`snapshot` pinned; reading this result
+        afterwards fails. ``DataFrame.unpersist()`` does not reach them:
+        they are the blocks of the checkpointed RDD under the plan's
+        LogicalRDD node."""
+        self.raw._jdf.queryExecution().analyzed().rdd().unpersist(True)
+
     @property
     def states(self) -> DataFrame:
         """(partition, state JSON) — the `$projections-<name>-result` analog."""

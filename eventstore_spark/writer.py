@@ -618,8 +618,9 @@ class EventLogWriter:
         calls are gathered by a collector thread and committed as ONE
         parquet file + ONE manifest publish — the group-commit of the
         reference's RequestManager pipeline (many in-flight appends, one
-        storage write), amortizing the per-commit fsync/manifest cost
-        across callers. Results (and per-append errors such as
+        storage write), amortizing the per-commit parquet write and
+        manifest publish across callers (the commit path issues no
+        fsync). Results (and per-append errors such as
         WrongExpectedVersion) resolve per caller.
         """
         if self._read_only:
