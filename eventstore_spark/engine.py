@@ -102,6 +102,9 @@ class EventStoreEngine:
             read_only=read_only,
         )
         self.projections: dict[str, _ManagedProjection] = {}
+        # (generation key, (metadata dimension, row count)), see
+        # _metadata_table
+        self._metadata_cache: tuple | None = None
         # groups rebuilt by a service-level ReplayParked with no live
         # instance: the next attach for the key ADOPTS the rebuilt group
         # so its re-buffered (already-truncated-from-parked) deliveries
@@ -172,8 +175,18 @@ class EventStoreEngine:
 
     # ------------------------------------------------------------------ log
     def events(self, visible_only: bool = True) -> DataFrame:
-        """The canonical events DataFrame (visibility rules applied)."""
-        return self._events_of(self.writer.load(), visible_only)
+        """The canonical events DataFrame (visibility rules applied).
+
+        Visibility is resolved ONCE per log generation: the metadata
+        dimension (``stream_metadata``) is collected to the driver the
+        first time a generation is read and reused by every later read of
+        it, so a read no longer re-derives retention inside each Spark
+        action. With no metadata and no tombstones (the common case) the
+        visible log is the raw log minus metastreams, with no join.
+        Collecting adds no size limit: ``visible_events`` broadcasts the
+        dimension, so it always had to fit on the driver. ``$maxAge``
+        still compares against ``current_timestamp`` at query time."""
+        return self._events_of(*self.writer.snapshot(), visible_only)
 
     def events_at(self, manifest_seq: int, visible_only: bool = True) -> DataFrame:
         """Time travel: the store as of manifest generation
@@ -182,26 +195,59 @@ class EventStoreEngine:
         the result is exactly what ``events()`` returned at that commit —
         the reproducible-training-snapshot read. Bounded by ``vacuum``:
         generations inside the grace window are always available."""
-        return self._events_of(self.writer.load_at(manifest_seq), visible_only)
+        return self._events_of(*self.writer.snapshot_at(manifest_seq),
+                               visible_only)
 
     def manifest_history(self) -> list[int]:
         from . import manifest as _manifest
 
         return _manifest.history(self.path)
 
-    def _events_of(self, df: DataFrame, visible_only: bool) -> DataFrame:
+    def _events_of(self, key: tuple | None, df: DataFrame,
+                   visible_only: bool) -> DataFrame:
         if not visible_only:
             return df
-        md = self.stream_metadata(df)
         user = df.where(~df.stream_id.startswith(METASTREAM_PREFIX))
-        return visible_events(user, md)
+        if key is None:  # plain directory: no generation to key on
+            return visible_events(user, self._derive_metadata(df))
+        md, rows = self._metadata_table(key, df)
+        return user if rows == 0 else visible_events(user, md)
 
-    def stream_metadata(self, df: DataFrame | None = None) -> DataFrame | None:
-        """Parse `$$<stream>` metastreams into the metadata dimension
-        (latest $metadata event wins), plus tombstones from the log.
-        ``df`` overrides the log snapshot (time-travel reads)."""
-        if df is None:
-            df = self.writer.load()
+    def _metadata_table(self, key: tuple, df: DataFrame) -> tuple[DataFrame, int]:
+        """(metadata dimension of generation ``key`` as a local relation,
+        its row count): collected once and kept for the latest generation
+        read (one entry, under the writer's snapshot lock; dropped by
+        ``close``). A failed collect caches nothing."""
+        lock = self.writer.snapshot_lock
+        with lock:
+            hit = self._metadata_cache
+            if hit is not None and hit[0] == key:
+                return hit[1]
+        table = self._derive_metadata(df).toArrow()
+        md = (self.spark.createDataFrame(table, STREAM_METADATA_SCHEMA),
+              table.num_rows)
+        with lock:
+            self._metadata_cache = (key, md)
+        return md
+
+    def stream_metadata(self, df: DataFrame | None = None) -> DataFrame:
+        """The metadata dimension: one row per stream with its latest
+        `$$<stream>` $metadata (retention, $acl, $tmp, $cacheControl)
+        and its tombstone flag. With no ``df`` it serves the rows of the
+        current generation that ``events()`` uses — a local relation,
+        collected once per generation. ``df`` derives the dimension
+        lazily from that snapshot instead (a Spark plan over ``df``)."""
+        if df is not None:
+            return self._derive_metadata(df)
+        key, df = self.writer.snapshot()
+        if key is None:
+            return self._derive_metadata(df)
+        return self._metadata_table(key, df)[0]
+
+    @staticmethod
+    def _derive_metadata(df: DataFrame) -> DataFrame:
+        """Parse `$$<stream>` metastreams of ``df`` into the metadata
+        dimension (latest $metadata event wins), plus its tombstones."""
         metas = df.where(
             df.stream_id.startswith(METASTREAM_PREFIX)
             & (df.event_type == "$metadata")
@@ -397,11 +443,14 @@ class EventStoreEngine:
         metastreams are excluded wholesale), so they are pulled from the
         raw log here — the reference's projection reader likewise sees
         them in $all before visibility applies."""
-        raw = self.writer.load()
-        notices = raw.where(
-            sysproj.tombstone_row() | sysproj.softdelete_meta_row()
-        )
-        return self.events().unionByName(notices)
+        key, raw = self.writer.snapshot()
+        # one filtered scan per notice shape (the two are disjoint): an Or
+        # with the soft-delete $tb JSON test cannot reach the parquet
+        # reader, while each shape's own event_type equality can, so
+        # row-group stats prune both notice scans
+        notices = raw.where(sysproj.tombstone_row()).unionByName(
+            raw.where(sysproj.softdelete_meta_row()))
+        return self._events_of(key, raw, True).unionByName(notices)
 
     def _system_base(self, ev: DataFrame, stream_id: str) -> DataFrame:
         """The DataFrame a system-stream NAME reads from.
@@ -2216,7 +2265,8 @@ class EventStoreEngine:
         append requires a fresh engine/writer, which re-acquires the
         lock. The auto-run system-projection query (if any) stops first —
         its sink appends through this writer. Onetime projection snapshots
-        are freed (``projection_state`` then reports "has not run")."""
+        are freed (``projection_state`` then reports "has not run"), and
+        the cached snapshot and visibility table are dropped."""
         q = self._system_links_query
         if q is not None:
             self._system_links_query = None
@@ -2229,6 +2279,8 @@ class EventStoreEngine:
             for mp in self.projections.values():
                 self._release_result(mp)
         finally:
+            with self.writer.snapshot_lock:
+                self._metadata_cache = None
             self.writer.close()
 
     # ------------------------------------------------------------------ SQL
@@ -2254,11 +2306,13 @@ class EventStoreEngine:
         tombstones included), ``<prefix>_streams`` ($streams directory),
         ``<prefix>_metadata`` (stream metadata incl. tombstones), plus one
         ``<prefix>_proj_<name>`` per projection that has run. Returns the
-        registered names. Views are lazy — each query re-plans against the
-        current log state, with pruning/pushdown intact — except a onetime
-        projection's view, which reads that run's snapshot
-        (``run_projection``): register again after the projection's next
-        run, which frees it.
+        registered names. Views are lazy plans with pruning/pushdown
+        intact, pinned to the log generation current at registration (its
+        file list and visibility table; ``$maxAge`` is still evaluated at
+        query time): register again to see later commits. A onetime
+        projection's view reads that run's snapshot (``run_projection``):
+        register again after the projection's next run, which frees it.
+        ``<prefix>_metadata`` is the same dimension ``events()`` uses.
 
         Time travel (round-5): ``<prefix>_manifest_history`` lists the
         available manifest generations (generation, files, published_at),
@@ -2279,6 +2333,9 @@ class EventStoreEngine:
             out.append(name)
 
         reg(f"{prefix}_events", self.events())
+        # taken before the as-of views, whose tables replace the current
+        # generation's in the one-entry cache
+        meta = self.stream_metadata()
         reg(f"{prefix}_all", self.events(visible_only=False))
         reg(f"{prefix}_streams", self.streams())
         from . import manifest as _manifest
@@ -2307,9 +2364,7 @@ class EventStoreEngine:
             )
             for seq in (gens[-max_as_of_views:] if max_as_of_views else []):
                 reg(f"{prefix}_events_at_{seq}", self.events_at(seq))
-        meta = self.stream_metadata()
-        if meta is not None:
-            reg(f"{prefix}_metadata", meta)
+        reg(f"{prefix}_metadata", meta)
         for name, mp in self.projections.items():
             if mp.last_result is not None:
                 reg(f"{prefix}_proj_{name}", mp.last_result.states)

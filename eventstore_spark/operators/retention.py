@@ -9,6 +9,9 @@ Spark-first translation: visibility is a JOIN + predicate applied as a
 VIEW over the log — Catalyst pushes the per-stream bounds into the scan.
 The broadcast of ``stream_metadata`` (a small dimension: one row per
 stream with retention settings) keeps this shuffle-free at any scale.
+``EventStoreEngine.events()`` resolves that dimension once per log
+generation and passes it here as a local relation, the analog of the
+reference's per-stream metadata cache.
 """
 
 from __future__ import annotations
@@ -39,6 +42,11 @@ def visible_events(
     semi-filtered scan → tiny per-stream max → broadcast back), so the
     main log path stays shuffle-free — the Spark shape of the reference's
     O(1) last-event-number lookup in IndexBackend.
+
+    The dimension is broadcast, so it must fit on the driver; that is why
+    the engine can collect it once per log generation (``events()``) and
+    pass a local relation here without adding a size limit. ``now_ts``
+    defaults to ``current_timestamp``, evaluated at query time.
     """
     if stream_metadata is None:
         return events

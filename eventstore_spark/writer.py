@@ -373,6 +373,11 @@ class EventLogWriter:
         # $metadata event), lazily read from the metastream; drives
         # soft-delete recreate. Kept current on every metastream append.
         self._meta_cache: dict[str, dict] = {}
+        # one-entry (resolved paths, DataFrame) cache of the current log
+        # generation, see snapshot(); the lock also guards the engine's
+        # visibility table, which is keyed the same way
+        self.snapshot_lock = threading.Lock()
+        self._snapshot: tuple[tuple[str, ...], DataFrame] | None = None
         if read_only:
             return  # no fence, no recovery scan — reads resolve lazily
         with self._core.mutex:
@@ -1130,7 +1135,10 @@ class EventLogWriter:
         """Release the cross-process writer lock held by THIS PROCESS for
         the log directory (all in-process writer objects share the claim
         via the _PathCore). A crashed process needs no close — its lock is
-        detected stale by pid-liveness and stolen by the next writer."""
+        detected stale by pid-liveness and stolen by the next writer.
+        Drops the cached snapshot DataFrame."""
+        with self.snapshot_lock:
+            self._snapshot = None
         if self._read_only:
             return  # never held the fence — and must not release the
             # owning writer's claim through the shared core
@@ -1215,30 +1223,54 @@ class EventLogWriter:
         here, at DataFrame creation, so a concurrent maintenance rewrite
         can never FileNotFound this reader (superseded files are retained
         until ``vacuum``'s grace period expires). Plain directories (no
-        manifest yet) read as before."""
+        manifest yet) read as before.
+
+        Each log generation is resolved ONCE: every load() in the same
+        generation returns the same DataFrame, so its reads share one
+        plan and pay for one file listing (Spark lists more than 32
+        explicit paths with a job). The cache key is the RESOLVED path
+        list, not the manifest's file names — archiving moves a file to
+        the cold tier under the same name, and a DataFrame over the old
+        hot path would then fail to read it."""
+        return self.snapshot()[1]
+
+    def snapshot(self) -> tuple[tuple[str, ...] | None, DataFrame]:
+        """``(key, load())``: the key is the tuple of resolved paths of
+        the current generation; None in plain-directory mode, which has
+        no generation to key on and is never cached."""
         files = manifest.snapshot_files(self.path)
         if files is None:
-            return self.spark.read.schema(EVENTS_SCHEMA).parquet(self.path)
-        return self._load_files(files)
+            return None, self.spark.read.schema(EVENTS_SCHEMA).parquet(self.path)
+        # archive-aware: names resolve to the hot tier when present, else
+        # to the cold tier (manifest.resolve_files) — the transparent
+        # read-through of the reference's archiving feature
+        key = tuple(manifest.resolve_files(self.path, files))
+        with self.snapshot_lock:
+            if self._snapshot is not None and self._snapshot[0] == key:
+                return self._snapshot
+        snap = key, self._read_paths(key)
+        with self.snapshot_lock:
+            self._snapshot = snap
+        return snap
 
     def load_at(self, seq: int) -> DataFrame:
         """Time travel: the log as of manifest generation ``seq`` (see
         ``manifest.history``). Raises if that generation was never
         published or has been vacuumed away."""
+        return self.snapshot_at(seq)[1]
+
+    def snapshot_at(self, seq: int) -> tuple[tuple[str, ...], DataFrame]:
+        """``(key, load_at(seq))``, keyed like ``snapshot``; not cached."""
         files = manifest.files_at(self.path, seq)
         if files is None:
             raise ValueError(
                 f"manifest generation {seq} not available for {self.path} "
                 "(never published, or removed by vacuum)"
             )
-        return self._load_files(files)
+        key = tuple(manifest.resolve_files(self.path, files))
+        return key, self._read_paths(key)
 
-    def _load_files(self, files: list[str]) -> DataFrame:
-        if not files:
+    def _read_paths(self, paths: tuple[str, ...]) -> DataFrame:
+        if not paths:
             return self.spark.createDataFrame([], EVENTS_SCHEMA)
-        # archive-aware: names resolve to the hot tier when present, else
-        # to the cold tier (manifest.resolve_files) — the transparent
-        # read-through of the reference's archiving feature
-        return self.spark.read.schema(EVENTS_SCHEMA).parquet(
-            *manifest.resolve_files(self.path, files)
-        )
+        return self.spark.read.schema(EVENTS_SCHEMA).parquet(*paths)
