@@ -203,13 +203,11 @@ class EventStoreEngine:
 
         return _manifest.history(self.path)
 
-    def _events_of(self, key: tuple | None, df: DataFrame,
+    def _events_of(self, key: tuple, df: DataFrame,
                    visible_only: bool) -> DataFrame:
         if not visible_only:
             return df
         user = df.where(~df.stream_id.startswith(METASTREAM_PREFIX))
-        if key is None:  # plain directory: no generation to key on
-            return visible_events(user, self._derive_metadata(df))
         md, rows = self._metadata_table(key, df)
         return user if rows == 0 else visible_events(user, md)
 
@@ -239,10 +237,7 @@ class EventStoreEngine:
         lazily from that snapshot instead (a Spark plan over ``df``)."""
         if df is not None:
             return self._derive_metadata(df)
-        key, df = self.writer.snapshot()
-        if key is None:
-            return self._derive_metadata(df)
-        return self._metadata_table(key, df)[0]
+        return self._metadata_table(*self.writer.snapshot())[0]
 
     @staticmethod
     def _derive_metadata(df: DataFrame) -> DataFrame:
@@ -1862,10 +1857,6 @@ class EventStoreEngine:
             F.max("log_position").alias("head_position"),
         ).first()
         files = _manifest.snapshot_files(self.path)
-        if files is None:
-            files = [
-                f for f in os.listdir(self.path) if f.endswith(".parquet")
-            ]
         arch = _manifest.archive_config(self.path)
         archived = set(arch.get("files", []))
         size = archived_bytes = 0

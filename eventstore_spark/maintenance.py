@@ -57,23 +57,16 @@ from pyspark.sql import functions as F
 from . import manifest
 from .manifest import vacuum  # noqa: F401  (public maintenance surface)
 from .operators.retention import visible_events
-from .schema import EVENTS_SCHEMA, MAX_LONG, METASTREAM_PREFIX
+from .schema import MAX_LONG, METASTREAM_PREFIX
 
 
 def _read_snapshot(spark: SparkSession, path: str) -> tuple[DataFrame, int]:
     """(DataFrame, manifest seq) of the log's current committed snapshot
-    (manifest-aware, pinned). The seq is what the eventual publish CASes
-    against — a concurrent append moves it and fails the rewrite loudly
-    instead of losing the append. -1 = plain-directory mode."""
-    cur = manifest.latest(path)
-    if cur is None:
-        return spark.read.schema(EVENTS_SCHEMA).parquet(path), -1
-    seq, files = cur
-    if not files:
-        return spark.createDataFrame([], EVENTS_SCHEMA), seq
-    return spark.read.schema(EVENTS_SCHEMA).parquet(
-        *manifest.resolve_files(path, files)
-    ), seq
+    (pinned). The seq is what the eventual publish CASes against — a
+    concurrent append moves it and fails the rewrite loudly instead of
+    losing the append."""
+    seq, paths = manifest.resolve(path)
+    return manifest.read_files(spark, paths), seq
 
 
 def _publish_rewrite(path: str, staging: str, tag: str,
@@ -84,13 +77,8 @@ def _publish_rewrite(path: str, staging: str, tag: str,
     against ``base_seq`` (the generation the rewrite read). Superseded
     files remain on disk for ``vacuum``'s grace window. On conflict the
     staged files are removed before re-raising: nothing half-published."""
-    gen = int(time.time() * 1000)
-    new_names = []
-    for i, f in enumerate(sorted(os.listdir(staging))):
-        if f.endswith(".parquet"):
-            name = f"part-{tag}-{gen}-{i:05d}.parquet"
-            os.rename(os.path.join(staging, f), os.path.join(path, name))
-            new_names.append(name)
+    new_names = manifest.move_in(
+        path, staging, f"part-{tag}-{int(time.time() * 1000)}")
     try:
         manifest.replace_snapshot(
             path, list(keep or []) + new_names, base_seq=base_seq
@@ -101,9 +89,7 @@ def _publish_rewrite(path: str, staging: str, tag: str,
                 os.remove(os.path.join(path, name))
             except FileNotFoundError:
                 pass
-        shutil.rmtree(staging, ignore_errors=True)
         raise
-    shutil.rmtree(staging)
     return new_names
 
 
@@ -160,7 +146,7 @@ def scavenge(
 
     staging = path.rstrip("/") + f"._scavenge_{int(time.time() * 1000)}"
     kept.coalesce(target_files).write.mode("overwrite").parquet(staging)
-    after = spark.read.schema(EVENTS_SCHEMA).parquet(staging).count()
+    after = manifest.read_files(spark, [staging]).count()
 
     files = _publish_rewrite(path, staging, "scavenge", base_seq)
     return {
@@ -246,7 +232,7 @@ def optimize_layout(spark: SparkSession, path: str, target_files: int = 8) -> di
         .write.mode("overwrite")
         .parquet(staging)
     )
-    after = spark.read.schema(EVENTS_SCHEMA).parquet(staging).count()
+    after = manifest.read_files(spark, [staging]).count()
     if after != n:  # paranoia: never swap in a lossy rewrite
         shutil.rmtree(staging)
         raise RuntimeError(f"optimize_layout row mismatch: {n} -> {after}")
@@ -420,8 +406,8 @@ def archive_cold(path: str, archive_base: str,
     likewise keeps PTables/scavenge.db local, archiving.md)."""
     import pyarrow.parquet as pq
 
-    files = manifest.snapshot_files(path)
-    if files is None:
+    seq, files = manifest.latest(path)
+    if seq < 0:
         raise ValueError(
             f"{path} has no manifest yet — append once (or scavenge) "
             "before archiving"
@@ -543,12 +529,11 @@ def backup(path: str, dest: str, include_projections: bool = True) -> dict:
     (backup.md's differential step 7), and files no longer referenced
     are pruned (step 8). Projection state/connector settings ride along
     when ``include_projections`` (the index-directory analog)."""
-    cur = manifest.latest(path)
-    if cur is None:
+    seq, files = manifest.latest(path)
+    if seq < 0:
         raise ValueError(
             f"{path} has no manifest — append once before backing up"
         )
-    seq, files = cur
     os.makedirs(dest, exist_ok=True)
     copied = skipped = 0
     for name, src in zip(files, manifest.resolve_files(path, files)):
@@ -563,8 +548,8 @@ def backup(path: str, dest: str, include_projections: bool = True) -> dict:
     # prune names no longer referenced (differential step 8)
     keep = set(files)
     pruned = 0
-    for n in os.listdir(dest):
-        if n.endswith(".parquet") and n not in keep:
+    for n in manifest.data_files(dest):
+        if n not in keep:
             os.remove(os.path.join(dest, n))
             pruned += 1
     # the pinned manifest goes last — a torn backup without it is inert
@@ -708,18 +693,8 @@ def redact_events(spark: SparkSession, path: str, targets: list[str]) -> dict:
     ]
     if not affected:
         return {"redacted": 0, "files_rewritten": 0}
-    cur_files = manifest.snapshot_files(path)
-    if cur_files is None:
-        # plain-directory store (no manifest yet): the keep-set is the
-        # whole directory listing — deriving it from the absent manifest
-        # would publish a first snapshot referencing ONLY the rewritten
-        # files, orphaning (and eventually vacuuming) every untouched
-        # log file
-        cur_files = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    keep = [f for f in cur_files if f not in set(affected)]
-    sub = spark.read.schema(EVENTS_SCHEMA).parquet(
-        *manifest.resolve_files(path, affected)
-    )
+    keep = [f for f in manifest.snapshot_files(path) if f not in set(affected)]
+    sub = manifest.read_files(spark, manifest.resolve_files(path, affected))
     m = F.trim(F.col("metadata"))
     merged_meta = (
         F.when(m.isNull() | (m == "") | (F.regexp_replace(m, r"\s", "") == "{}"),

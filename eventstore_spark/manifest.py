@@ -18,19 +18,27 @@ superseded files on disk until ``vacuum`` removes files unreferenced by the
 current manifest after a grace period. An in-flight reader therefore always
 finds every file of the snapshot it pinned.
 
-Back-compat: a directory with no ``_manifest/`` behaves exactly as before
-(plain dir listing); the first manifested commit bootstraps the list from
-the directory. At scale the manifest is one small JSON per commit whose
-size tracks the live file count — bounded by ``optimize_layout``
-compaction, the same way Delta relies on OPTIMIZE + checkpointing.
+One format: a directory with no ``_manifest/`` yet (raw parquet dumps,
+test fixtures) is generation −1, whose file list is the directory listing
+(``data_files``). Every reader resolves it like any other generation, and
+the first commit publishes generation 0 from that listing, so nothing
+outside this module knows whether a manifest exists. At scale the
+manifest is one small JSON per commit whose size tracks the live file
+count — bounded by ``optimize_layout`` compaction, the same way Delta
+relies on OPTIMIZE + checkpointing.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST_DIR = "_manifest"
 
@@ -50,32 +58,70 @@ def _dir(path: str) -> str:
     return os.path.join(path, MANIFEST_DIR)
 
 
-def latest(path: str) -> tuple[int, list[str]] | None:
-    """(seq, files) of the newest complete manifest, or None if the log
-    has never published one (plain-directory mode). One name-parse loop
-    lives in ``history`` — this derives from it."""
+def data_files(path: str) -> list[str]:
+    """Parquet file names in ``path``, sorted — generation −1's file list,
+    and the on-disk side of vacuum and the subscription predicates."""
+    try:
+        names = os.listdir(path)
+    except FileNotFoundError:
+        return []
+    return sorted(n for n in names if n.endswith(".parquet"))
+
+
+def latest(path: str) -> tuple[int, list[str]]:
+    """(seq, files) of the newest complete manifest; ``(-1,
+    data_files(path))`` while the log has never published one. One
+    name-parse loop lives in ``history`` — this derives from it."""
     gens = history(path)
     if not gens:
-        return None
+        return -1, data_files(path)
     best = gens[-1]
     with open(os.path.join(_dir(path), f"manifest-{best:010d}.json")) as f:
         return best, json.load(f)["files"]
 
 
-def snapshot_files(path: str) -> list[str] | None:
-    """Current committed file names (relative), or None in plain-dir mode."""
-    cur = latest(path)
-    return None if cur is None else cur[1]
+def snapshot_files(path: str) -> list[str]:
+    """Current committed file names (relative)."""
+    return latest(path)[1]
 
 
 def files_at(path: str, seq: int) -> list[str] | None:
-    """File list of a SPECIFIC manifest generation (time travel), or None
-    if that generation does not exist (never published, or vacuumed)."""
+    """File list of a SPECIFIC generation (time travel), or None if that
+    generation does not exist (never published, or vacuumed). Generation
+    −1, the directory listing, exists only until a manifest does."""
+    if seq == -1:
+        return None if history(path) else data_files(path)
     f = os.path.join(_dir(path), f"manifest-{seq:010d}.json")
     if not os.path.isfile(f):
         return None
     with open(f) as fh:
         return json.load(fh)["files"]
+
+
+def resolve(path: str, seq: int | None = None) -> tuple[int, list[str]]:
+    """(seq, readable paths) of generation ``seq`` (default: the latest)
+    — the one way a reader pins a snapshot. Raises ``ValueError`` for a
+    generation that is not available."""
+    if seq is None:
+        seq, files = latest(path)
+    else:
+        files = files_at(path, seq)
+        if files is None:
+            raise ValueError(
+                f"manifest generation {seq} not available for {path} "
+                "(never published, or removed by vacuum)"
+            )
+    return seq, resolve_files(path, files)
+
+
+def read_files(spark: SparkSession, paths) -> DataFrame:
+    """The events DataFrame over resolved ``paths`` (an empty list is an
+    empty log) — the one reader every snapshot goes through."""
+    from .schema import EVENTS_SCHEMA
+
+    if not paths:
+        return spark.createDataFrame([], EVENTS_SCHEMA)
+    return spark.read.schema(EVENTS_SCHEMA).parquet(*paths)
 
 
 def history(path: str) -> list[int]:
@@ -119,53 +165,39 @@ def _write(path: str, seq: int, files: list[str]) -> int:
     return seq
 
 
-def append_files(path: str, new_files: list[str],
-                 base_seq: int | None = None) -> int:
-    """Publish manifest N+1 = current snapshot ∪ ``new_files`` (the append
-    commit). Bootstraps from the directory listing on first use — at that
-    point no superseded files can exist, so the listing IS the snapshot.
+def _base_files(path: str, base_seq: int) -> list[str]:
+    """File list of the generation a publish CASes against. A base that
+    no longer exists means the snapshot moved: generation −1 once a
+    manifest appeared, or a generation vacuumed under later ones —
+    publishing ``base_seq + 1`` below the live generations would orphan
+    the commit, so this raises instead."""
+    files = files_at(path, base_seq)
+    if files is None:
+        raise ManifestConflictError(
+            f"manifest generation {base_seq} of {path} is no longer "
+            "available (superseded by a first manifest, or vacuumed) — "
+            "re-sync and retry"
+        )
+    return files
 
-    ``base_seq`` makes the publish a true CAS against the generation the
-    WRITER last observed (not re-read here): if the snapshot moved in the
+
+def append_files(path: str, new_files: list[str], base_seq: int) -> int:
+    """Publish manifest N+1 = generation ``base_seq`` ∪ ``new_files``
+    (the append commit). From generation −1 this bootstraps generation 0
+    from the directory listing — at that point no superseded files can
+    exist, so the listing IS the snapshot.
+
+    ``base_seq`` is the generation the WRITER last observed (not re-read
+    here), so the publish is a true CAS: if the snapshot moved in the
     meantime — a maintenance rewrite, or a foreign writer that stole the
     lock — this raises ``ManifestConflictError`` instead of silently
-    publishing over state the caller never verified (the fencing backstop
-    writer.py documents). Omitting it keeps the read-latest-then-publish
-    behavior (still exclusive per generation via ``_write``, but
-    last-reader-wins on the base)."""
-    if base_seq is None:
-        cur = latest(path)
-        if cur is None:
-            base = {f for f in os.listdir(path) if f.endswith(".parquet")}
-            seq = -1
-        else:
-            seq, files = cur
-            base = set(files)
-    elif base_seq < 0:
-        # caller observed plain-dir mode; a manifest appearing since then
-        # must CONFLICT. Checking "generation 0 exists" at _write is not
-        # enough — gen 0 may have been vacuumed while later generations
-        # live, and publishing a new gen 0 below them would silently
-        # orphan this append from the live snapshot.
-        if latest(path) is not None:
-            raise ManifestConflictError(
-                f"{path} gained a manifest since this writer opened it "
-                "plain-dir — re-sync and retry"
-            )
-        base, seq = {f for f in os.listdir(path) if f.endswith(".parquet")}, -1
-    else:
-        files = files_at(path, base_seq)
-        if files is None:
-            raise ManifestConflictError(
-                f"manifest generation {base_seq} of {path} no longer exists "
-                "(vacuumed or never published) — re-sync and retry"
-            )
-        base, seq = set(files), base_seq
-    return _write(path, seq + 1, sorted(base | set(new_files)))
+    publishing over state the caller never verified (the fencing
+    backstop writer.py documents)."""
+    base = set(_base_files(path, base_seq))
+    return _write(path, base_seq + 1, sorted(base | set(new_files)))
 
 
-def replace_snapshot(path: str, files: list[str],
-                     base_seq: int | None = None) -> int:
+def replace_snapshot(path: str, files: list[str], base_seq: int) -> int:
     """Publish manifest N+1 referencing ONLY ``files`` (a maintenance
     rewrite). Superseded files stay on disk for ``vacuum``.
 
@@ -173,21 +205,23 @@ def replace_snapshot(path: str, files: list[str],
     publish is a CAS against it — if an append published base_seq+1 in
     the meantime, this raises ``ManifestConflictError`` instead of
     silently dropping the appended files from the snapshot (re-run the
-    rewrite from the new snapshot). Omitting ``base_seq`` preserves the
-    unguarded last-writer-wins behavior for callers that KNOW the writer
-    is quiesced."""
-    if base_seq is None:
-        cur = latest(path)
-        base_seq = -1 if cur is None else cur[0]
-    elif base_seq < 0 and latest(path) is not None:
-        # the rewrite was computed from plain-dir mode but a manifest
-        # exists now — "gen 0 already exists" is not a safe proxy once
-        # gen 0 has been vacuumed under later generations
-        raise ManifestConflictError(
-            f"{path} gained a manifest since this rewrite was computed "
-            "from plain-dir mode — re-run from the new snapshot"
-        )
+    rewrite from the new snapshot)."""
+    _base_files(path, base_seq)
     return _write(path, base_seq + 1, sorted(files))
+
+
+def move_in(path: str, staging: str, prefix: str) -> list[str]:
+    """Move the parquet files a Spark job wrote to ``staging`` into the
+    log dir as ``<prefix>-<i>.parquet`` and remove ``staging``; returns
+    the new names — exactly the files a publish may reference, whatever
+    else landed in the log dir meanwhile."""
+    names = []
+    for i, f in enumerate(data_files(staging)):
+        name = f"{prefix}-{i:05d}.parquet"
+        os.rename(os.path.join(staging, f), os.path.join(path, name))
+        names.append(name)
+    shutil.rmtree(staging, ignore_errors=True)
+    return names
 
 
 # ---------------------------------------------------------------------------
@@ -245,8 +279,8 @@ def resolve_files(path: str, files: list[str]) -> list[str]:
 
 
 def vacuum(path: str, grace_s: float = 3600.0) -> dict:
-    """Drain files superseded longer than ``grace_s`` ago. No-op in
-    plain-dir mode.
+    """Drain files superseded longer than ``grace_s`` ago. No-op before
+    the first manifest (generation −1 supersedes nothing).
 
     The grace clock starts at SUPERSESSION, not file creation: a manifest
     generation is "drained" only once its SUCCESSOR manifest is older
@@ -256,12 +290,10 @@ def vacuum(path: str, grace_s: float = 3600.0) -> dict:
     ``events_at`` keeps working for every generation whose JSON still
     exists. This is the contract the reference's scavenger honors — old
     chunks unlink only after readers drain (Scavenger.cs:199)."""
-    d = _dir(path)
-    if not os.path.isdir(d):
-        return {"removed": 0, "manifests_removed": 0, "archive_removed": 0}
     gens = history(path)
     if not gens:
         return {"removed": 0, "manifests_removed": 0, "archive_removed": 0}
+    d = _dir(path)
     cutoff = time.time() - grace_s
     keep: set[str] = set()
     drained: list[int] = []
@@ -277,8 +309,8 @@ def vacuum(path: str, grace_s: float = 3600.0) -> dict:
                 continue
         keep.update(files_at(path, seq) or [])
     removed = 0
-    for n in os.listdir(path):
-        if not n.endswith(".parquet") or n in keep:
+    for n in data_files(path):
+        if n in keep:
             continue
         full = os.path.join(path, n)
         try:

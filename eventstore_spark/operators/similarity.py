@@ -1240,37 +1240,43 @@ def pq_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10,
                 F.expr(_quantize_sql(vec_col)).alias("qvec"))
         .cache()
     )
-    seed_side = (
-        base.withColumn("_h", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("_h", "vec_id")
-        .limit(n_codes)
-        .withColumn("_seed", F.lit(True))
-    )
-    query_side = (
-        base.where(F.col("vec_id").isin(query_ids))
-        .withColumn("_h", F.md5(F.col("vec_id").cast("string")))
-        .withColumn("_seed", F.lit(False))
-    )
-    rows = seed_side.unionByName(query_side).collect()
-    seeds = sorted((r for r in rows if r["_seed"]), key=lambda r: (r["_h"], r["vec_id"]))
-    qrows = [r.asDict() | {"query_id": r["vec_id"]} for r in rows if not r["_seed"]]
-    dim = len(seeds[0]["qvec"])
-    assert dim % m == 0, f"dim {dim} not divisible by m={m}"
-    d = dim // m
-    kk = min(n_codes, len(seeds))
-    books = [
-        [[int(x) for x in r["qvec"][s * d:(s + 1) * d]] for r in seeds]
-        for s in range(m)
-    ]
-    books = _pq_train_iters(base, books, m, kk, iters, d)
-    cols = [_pq_code_sql("qvec", books[s], s * d + 1, d) for s in range(m)]
-    codes = base.select(
-        "vec_id", F.expr("array({})".format(", ".join(cols))).alias("codes")
-    ).transform(scoped_cache)
-    # the scoring action recomputes base's lineage once into the codes
-    # cache (one corpus pass, same as the old pq_encode scan) instead of
-    # pinning the corpus-sized qvec table for the query's lifetime
-    base.unpersist()
+    try:
+        seed_side = (
+            base.withColumn("_h", F.md5(F.col("vec_id").cast("string")))
+            .orderBy("_h", "vec_id")
+            .limit(n_codes)
+            .withColumn("_seed", F.lit(True))
+        )
+        query_side = (
+            base.where(F.col("vec_id").isin(query_ids))
+            .withColumn("_h", F.md5(F.col("vec_id").cast("string")))
+            .withColumn("_seed", F.lit(False))
+        )
+        rows = seed_side.unionByName(query_side).collect()
+        seeds = sorted((r for r in rows if r["_seed"]), key=lambda r: (r["_h"], r["vec_id"]))
+        qrows = [r.asDict() | {"query_id": r["vec_id"]} for r in rows if not r["_seed"]]
+        if not seeds:
+            raise ValueError("pq_topk needs a non-empty corpus")
+        dim = len(seeds[0]["qvec"])
+        if dim % m:
+            raise ValueError(f"dim {dim} not divisible by m={m}")
+        d = dim // m
+        kk = min(n_codes, len(seeds))
+        books = [
+            [[int(x) for x in r["qvec"][s * d:(s + 1) * d]] for r in seeds]
+            for s in range(m)
+        ]
+        books = _pq_train_iters(base, books, m, kk, iters, d)
+        cols = [_pq_code_sql("qvec", books[s], s * d + 1, d) for s in range(m)]
+        codes = base.select(
+            "vec_id", F.expr("array({})".format(", ".join(cols))).alias("codes")
+        ).transform(scoped_cache)
+    finally:
+        # the scoring action recomputes base's lineage once into the codes
+        # cache (one corpus pass, same as the old pq_encode scan) instead of
+        # pinning the corpus-sized qvec table for the query's lifetime;
+        # freed on failure too, where nothing else could reach it
+        base.unpersist()
     per_query = []
     for r in sorted(qrows, key=lambda r: r["query_id"]):
         qv = [int(x) for x in r["qvec"]]

@@ -606,10 +606,9 @@ class ConnectorManager:
                 with open(sp_file) as fh:
                     fp = int(fh.read().strip())
             else:
-                from ..schema import EVENTS_SCHEMA
+                from .. import manifest as M
 
-                tail = (self.spark.read.schema(EVENTS_SCHEMA)
-                        .parquet(self.log_path)
+                tail = (M.read_files(self.spark, M.resolve(self.log_path)[1])
                         .agg(F.max("log_position").alias("m"))
                         .collect()[0].m)
                 fp = int(tail) + 1 if tail is not None else 0

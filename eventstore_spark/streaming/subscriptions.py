@@ -60,15 +60,14 @@ def _maintenance_safe_predicate(log_path: str,
 
     from .. import manifest as M
 
-    snap = M.snapshot_files(log_path)
-    if snap is None:
+    seq, snap = M.latest(log_path)
+    if seq < 0:
         return None
     fname = F.substring_index(F.input_file_name(), "/", -1)
     gen = F.regexp_extract(fname, r"^part-(?:scavenge|optimize|redact)-(\d+)-", 1)
     cut = int(time.time() * 1000) if started_at_ms is None else started_at_ms
     pred = (gen == "") | (gen.cast("long") <= cut)
-    disk = {f for f in os.listdir(log_path) if f.endswith(".parquet")}
-    superseded = sorted(disk - set(snap))
+    superseded = sorted(set(M.data_files(log_path)) - set(snap))
     if superseded:
         pred = pred & ~fname.isin(superseded)
     return pred
@@ -441,8 +440,6 @@ def subscription_backlog(log_path: str, checkpoint_location: str,
 
     seen = _checkpoint_seen_files(checkpoint_location)
     committed = M.snapshot_files(log_path)
-    if committed is None:
-        committed = [f for f in os.listdir(log_path) if f.endswith(".parquet")]
     if seen is None:
         seen = set()
     pending = [f for f in committed if f not in seen]
@@ -584,9 +581,6 @@ def start_with_markers(
         # (they'd fire a spurious FellBehind on a subscription that is
         # in fact keeping up)
         committed = M.snapshot_files(log_path)
-        if committed is None:
-            committed = [f for f in os.listdir(log_path)
-                         if f.endswith(".parquet")]
         cached = batch_df.persist()  # keep THIS reference for unpersist —
         # rebinding to .drop(...) would unpersist a different plan and
         # leak one cached micro-batch per trigger (round-8 review)
@@ -620,7 +614,7 @@ def start_with_markers(
                 # this, every micro-batch would shuffle the whole log
                 # through the resolve join at warehouse scale.
                 from ..operators.links import parse_link, resolve_links
-                from ..schema import EVENTS_SCHEMA as _ES, LINK_EVENT_TYPE
+                from ..schema import LINK_EVENT_TYPE
 
                 target_streams = [
                     r[0] for r in matches
@@ -628,13 +622,7 @@ def start_with_markers(
                     .select(parse_link(F.col("data")).alias("t"))
                     .select("t.target_stream").distinct().collect()
                 ]
-                snap = M.snapshot_files(log_path)
-                log_df = (
-                    spark.read.schema(_ES).parquet(
-                        *M.resolve_files(log_path, snap))
-                    if snap else
-                    spark.read.schema(_ES).parquet(log_path)
-                ).where(
+                log_df = M.read_files(spark, M.resolve(log_path)[1]).where(
                     F.col("stream_id").isin(target_streams)
                     if target_streams else F.lit(False)
                 )

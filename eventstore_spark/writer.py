@@ -46,8 +46,9 @@ window partitioned by stream, and global positions come from per-stream
 contiguous blocks allocated on the driver from one tiny per-stream count —
 no ``collect()`` of event rows ever happens.
 
-Readers never coordinate with the writer: they read the directory as a
-plain parquet table (plus ``load()`` here).
+Readers never coordinate with the writer: they pin a manifest
+generation (``manifest.resolve``) and read exactly its files, through
+``load()`` here or any other holder of the path.
 """
 
 from __future__ import annotations
@@ -389,24 +390,18 @@ class EventLogWriter:
                 )
             self._core.last_position = self._last_position
             if self._core.manifest_seq is None:
-                cur = manifest.latest(path)
-                self._core.manifest_seq = -1 if cur is None else cur[0]
+                self._core.manifest_seq = manifest.latest(path)[0]
 
     @property
     def read_only(self) -> bool:
         return self._read_only
 
-    def _has_files(self) -> bool:
-        files = manifest.snapshot_files(self.path)
-        if files is None:
-            return any(f.endswith(".parquet") for f in os.listdir(self.path))
-        return bool(files)
-
     # -- recovery: one scalar read, never a full-log collect --
     def _recover(self) -> None:
-        if not self._has_files():
+        key, log = self.snapshot()
+        if not key:  # an empty log
             return
-        row = self.load().agg(F.max("log_position")).first()
+        row = log.agg(F.max("log_position")).first()
         self._last_position = int(row[0] or 0)
 
     def _stream_state(self, stream_id: str) -> list:
@@ -432,9 +427,10 @@ class EventLogWriter:
         ):
             return st
         rows = []
-        if self._has_files():
+        key, log = self.snapshot()
+        if key:
             rows = (
-                self.load()
+                log
                 .where(F.col("stream_id") == stream_id)
                 .orderBy(F.col("event_number").desc())
                 .limit(IDEMPOTENCY_WINDOW)
@@ -578,9 +574,10 @@ class EventLogWriter:
         ):
             return self._meta_cache[stream_id]
         doc: dict = {}
-        if self._has_files():
+        key, log = self.snapshot()
+        if key:
             rows = (
-                self.load()
+                log
                 .where(
                     (F.col("stream_id") == meta_id)
                     & (F.col("event_type") == METADATA_EVENT_TYPE)
@@ -884,8 +881,7 @@ class EventLogWriter:
                 attempts += 1
                 if attempts >= 8:
                     raise
-                cur = manifest.latest(self.path)
-                self._core.manifest_seq = -1 if cur is None else cur[0]
+                self._core.manifest_seq = manifest.latest(self.path)[0]
 
     def _bump_stream_gen(self, stream_id: str) -> None:
         """Record a commit touching ``stream_id`` in the shared core and
@@ -941,21 +937,22 @@ class EventLogWriter:
         b = batch.select(
             "stream_id", "event_type", "data", "metadata", "event_id", *order_cols
         ).dropDuplicates(["stream_id", "event_id"])
-        if self._has_files():
+        key, log = self.snapshot()
+        if key:
             # exactly-once anti-join, PRUNED to the batch's own streams:
             # the log side filters on the touched stream set (one tiny
             # distinct over the batch), so the scan prunes by row-group
             # stats / buckets instead of shuffling the whole log. A batch
             # touching an enormous stream set falls back to the full
             # anti-join rather than building an oversized isin plan.
-            log = self.load().select("stream_id", "event_id")
+            ids = log.select("stream_id", "event_id")
             sids = [
                 r["stream_id"]
                 for r in b.select("stream_id").distinct().limit(10_001).collect()
             ]
             if len(sids) <= 10_000:
-                log = log.where(F.col("stream_id").isin(sids))
-            b = b.join(log, ["stream_id", "event_id"], "left_anti")
+                ids = ids.where(F.col("stream_id").isin(sids))
+            b = b.join(ids, ["stream_id", "event_id"], "left_anti")
         b = b.cache()
         try:
             # one job yields per-stream counts AND the size guard: the
@@ -984,9 +981,9 @@ class EventLogWriter:
                 self._stats.pop(s, None)
                 self._ids.pop(s, None)
                 self._cache_gen[s] = self._core.stream_gen.get(s, 0)
-            if missing and self._has_files():
+            if missing and key:
                 got = (
-                    self.load()
+                    log
                     .where(F.col("stream_id").isin(missing))
                     .groupBy("stream_id")
                     .agg(
@@ -1046,16 +1043,16 @@ class EventLogWriter:
                 .withColumn("category", _category_of(F.col("stream_id")))
                 .select([f.name for f in EVENTS_SCHEMA.fields])
             )
-            # capture the dir listing BEFORE the write so the manifest
-            # gains exactly the files this commit adds — never resurrecting
-            # superseded (scavenged, pre-vacuum) files that are still on
-            # disk inside their grace period
-            pre = {f for f in os.listdir(self.path) if f.endswith(".parquet")}
-            out.write.mode("append").parquet(self.path)
-            self._publish_append(
-                [f for f in os.listdir(self.path)
-                 if f.endswith(".parquet") and f not in pre],
-            )
+            # staged, then moved in under fresh names: the manifest gains
+            # exactly the files this commit wrote — never a superseded
+            # file inside its grace period, nor one a concurrent rewrite
+            # moved into the log dir during the write
+            staging = os.path.join(self.path, f"_staging-{uuid.uuid4().hex}")
+            out.write.parquet(staging)
+            self._publish_append(manifest.move_in(
+                self.path, staging,
+                f"part-bulk-{self._last_position + 1:020d}-{uuid.uuid4().hex[:8]}",
+            ))
             # the write committed — only now advance the numbering state
             self._last_position = self._core.last_position = new_last
             for sid, en_base, _pos in alloc:
@@ -1155,11 +1152,7 @@ class EventLogWriter:
         """Cheap change detector for logs written by ANOTHER process (no
         in-process commit notify): the set of committed parquet file names.
         One os.listdir — never a Spark job."""
-        try:
-            names = os.listdir(self.path)
-        except FileNotFoundError:
-            return frozenset()
-        return frozenset(n for n in names if n.endswith(".parquet"))
+        return frozenset(manifest.data_files(self.path))
 
     # -- delete surface (S8) --
     @staticmethod
@@ -1218,12 +1211,11 @@ class EventLogWriter:
         )
 
     def load(self) -> DataFrame:
-        """The committed log as a DataFrame — a PINNED SNAPSHOT: when the
-        log has a manifest (see ``manifest.py``), the file list is resolved
+        """The committed log as a DataFrame — a PINNED SNAPSHOT: the file
+        list of the current generation (see ``manifest.py``) is resolved
         here, at DataFrame creation, so a concurrent maintenance rewrite
         can never FileNotFound this reader (superseded files are retained
-        until ``vacuum``'s grace period expires). Plain directories (no
-        manifest yet) read as before.
+        until ``vacuum``'s grace period expires).
 
         Each log generation is resolved ONCE: every load() in the same
         generation returns the same DataFrame, so its reads share one
@@ -1234,21 +1226,14 @@ class EventLogWriter:
         hot path would then fail to read it."""
         return self.snapshot()[1]
 
-    def snapshot(self) -> tuple[tuple[str, ...] | None, DataFrame]:
+    def snapshot(self) -> tuple[tuple[str, ...], DataFrame]:
         """``(key, load())``: the key is the tuple of resolved paths of
-        the current generation; None in plain-directory mode, which has
-        no generation to key on and is never cached."""
-        files = manifest.snapshot_files(self.path)
-        if files is None:
-            return None, self.spark.read.schema(EVENTS_SCHEMA).parquet(self.path)
-        # archive-aware: names resolve to the hot tier when present, else
-        # to the cold tier (manifest.resolve_files) — the transparent
-        # read-through of the reference's archiving feature
-        key = tuple(manifest.resolve_files(self.path, files))
+        the current generation; an empty key is an empty log."""
+        key = tuple(manifest.resolve(self.path)[1])
         with self.snapshot_lock:
             if self._snapshot is not None and self._snapshot[0] == key:
                 return self._snapshot
-        snap = key, self._read_paths(key)
+        snap = key, manifest.read_files(self.spark, key)
         with self.snapshot_lock:
             self._snapshot = snap
         return snap
@@ -1261,16 +1246,5 @@ class EventLogWriter:
 
     def snapshot_at(self, seq: int) -> tuple[tuple[str, ...], DataFrame]:
         """``(key, load_at(seq))``, keyed like ``snapshot``; not cached."""
-        files = manifest.files_at(self.path, seq)
-        if files is None:
-            raise ValueError(
-                f"manifest generation {seq} not available for {self.path} "
-                "(never published, or removed by vacuum)"
-            )
-        key = tuple(manifest.resolve_files(self.path, files))
-        return key, self._read_paths(key)
-
-    def _read_paths(self, paths: tuple[str, ...]) -> DataFrame:
-        if not paths:
-            return self.spark.createDataFrame([], EVENTS_SCHEMA)
-        return self.spark.read.schema(EVENTS_SCHEMA).parquet(*paths)
+        key = tuple(manifest.resolve(self.path, seq)[1])
+        return key, manifest.read_files(self.spark, key)

@@ -1250,6 +1250,17 @@ def test_pq_zero_quantization_error_is_exact_l2(spark):
     assert got == exact
 
 
+def test_pq_topk_empty_corpus_raises_and_frees_its_cache(spark):
+    """An empty corpus is a clear ValueError, and the corpus cache built
+    for training is released on that path too."""
+    emb = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    persistent = spark.sparkContext._jsc.getPersistentRDDs()
+    before = persistent.size()
+    with pytest.raises(ValueError, match="non-empty corpus"):
+        sim.pq_topk(emb, [0], k=5, m=4, n_codes=8)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
 def test_pq_codes_shape_and_determinism(vectors):
     books = sim.train_pq_codebooks(vectors, m=4, k=8, iters=2)
     assert len(books) == 4 and all(len(b) == 8 for b in books)

@@ -23,7 +23,7 @@ def test_vacuum_grace_runs_from_supersession(tmp_path):
     os.makedirs(path)
     a = _touch(path, "a.parquet")
     b = _touch(path, "b.parquet")
-    manifest.append_files(path, ["a.parquet", "b.parquet"])
+    manifest.append_files(path, ["a.parquet", "b.parquet"], base_seq=-1)
     # age the DATA files and manifest 0 a day: creation age must not matter
     day = time.time() - 86400
     for p in (a, b, os.path.join(path, "_manifest", "manifest-0000000000.json")):
@@ -31,7 +31,7 @@ def test_vacuum_grace_runs_from_supersession(tmp_path):
 
     # a rewrite NOW supersedes them (manifest 1, fresh)
     _touch(path, "c.parquet")
-    manifest.replace_snapshot(path, ["c.parquet"])
+    manifest.replace_snapshot(path, ["c.parquet"], base_seq=0)
 
     # grace 1h: superseded only milliseconds ago → day-old files SURVIVE,
     # and the superseded generation stays time-travel-resolvable
@@ -58,12 +58,13 @@ def test_vacuum_keeps_files_shared_with_retained_generations(tmp_path):
     os.makedirs(path)
     shared = _touch(path, "shared.parquet", age_s=86400)
     only_old = _touch(path, "only_old.parquet", age_s=86400)
-    manifest.append_files(path, ["shared.parquet", "only_old.parquet"])
+    manifest.append_files(path, ["shared.parquet", "only_old.parquet"],
+                          base_seq=-1)
     day = time.time() - 86400
     os.utime(os.path.join(path, "_manifest", "manifest-0000000000.json"), (day, day))
     # generation 1 drops only_old but keeps shared; make it LOOK old too,
     # but current generations are always retained
-    manifest.replace_snapshot(path, ["shared.parquet"])
+    manifest.replace_snapshot(path, ["shared.parquet"], base_seq=0)
     res = manifest.vacuum(path, grace_s=0)
     assert os.path.exists(shared)
     assert not os.path.exists(only_old)
@@ -81,10 +82,11 @@ def test_replace_snapshot_cas_against_base_generation(tmp_path):
     path = str(tmp_path / "log")
     os.makedirs(path)
     _touch(path, "a.parquet")
-    manifest.append_files(path, ["a.parquet"])
+    manifest.append_files(path, ["a.parquet"], base_seq=-1)
     seq, _files = manifest.latest(path)  # rewrite snapshots here
     _touch(path, "b.parquet")
-    manifest.append_files(path, ["b.parquet"])  # concurrent append wins
+    manifest.append_files(path, ["b.parquet"],
+                          base_seq=seq)  # concurrent append wins
     with pytest.raises(ManifestConflictError):
         manifest.replace_snapshot(path, ["rewrite.parquet"], base_seq=seq)
     assert set(manifest.snapshot_files(path)) == {"a.parquet", "b.parquet"}
@@ -664,7 +666,7 @@ def test_redaction_plain_dir_keeps_untouched_files(spark, tmp_path):
         "append").parquet(path)
     spark.createDataFrame(rows_b, EVENTS_SCHEMA).coalesce(1).write.mode(
         "append").parquet(path)
-    assert M.latest(path) is None  # genuinely plain-dir
+    assert M.latest(path)[0] == -1  # genuinely plain-dir
     res = redact_events(spark, path, ["0@orders-1"])
     assert res["redacted"] == 1
     snap = M.snapshot_files(path)
@@ -693,7 +695,7 @@ def test_plain_dir_publish_conflicts_when_manifest_appeared(tmp_path):
     os.makedirs(path)
     for n in ("a.parquet", "b.parquet"):
         open(os.path.join(path, n), "w").write("x")
-    M.append_files(path, ["a.parquet"], base_seq=None)   # gen 0
+    M.append_files(path, ["a.parquet"], base_seq=-1)     # gen 0
     M.append_files(path, ["b.parquet"], base_seq=0)      # gen 1
     os.remove(os.path.join(path, "_manifest", "manifest-0000000000.json"))
     with pytest.raises(M.ManifestConflictError):

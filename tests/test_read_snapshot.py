@@ -14,9 +14,10 @@ from datetime import datetime, timedelta, timezone
 
 import pytest
 
+from eventstore_spark import manifest
 from eventstore_spark.engine import EventStoreEngine
 from eventstore_spark.operators.retention import visible_events
-from eventstore_spark.schema import METASTREAM_PREFIX
+from eventstore_spark.schema import EVENTS_SCHEMA, METASTREAM_PREFIX
 from eventstore_spark.writer import EventLogWriter, ProposedEvent
 
 
@@ -131,10 +132,23 @@ def test_one_dataframe_per_generation(spark, tmp_path):
     assert eng.writer.load() is second
 
 
-def test_plain_directory_is_never_cached(spark, tmp_path):
-    w = EventLogWriter(spark, str(tmp_path / "plain"), read_only=True)
-    assert w.snapshot()[0] is None  # no manifest: no generation key
-    assert w._snapshot is None and w.load() is not w.load()
+def test_plain_directory_is_cached_per_listing(spark, tmp_path):
+    """A directory with no manifest is generation -1: keyed on its
+    listing like any generation, so one listing reads one DataFrame and
+    a file added to the directory gives a new key and its rows."""
+    path = tmp_path / "plain"
+    rows = [(1, "a-1", "a", 0, "e1", "E", '{"i": 0}', None, None, True)]
+    spark.createDataFrame(rows, EVENTS_SCHEMA).write.parquet(str(path))
+    w = EventLogWriter(spark, str(path), read_only=True)
+    key, first = w.snapshot()
+    assert len(key) >= 1 and w.load() is first
+    assert [r.event_id for r in first.collect()] == ["e1"]
+    rows = [(2, "a-1", "a", 1, "e2", "E", '{"i": 1}', None, None, True)]
+    spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.mode(
+        "append").parquet(str(path))
+    key2, second = w.snapshot()
+    assert key2 != key and second is not first
+    assert sorted(r.event_id for r in second.collect()) == ["e1", "e2"]
 
 
 def test_archive_then_drop_local_reads_same_rows(spark, tmp_path):
@@ -172,11 +186,15 @@ def test_failed_load_or_collect_caches_nothing(spark, tmp_path, monkeypatch):
     def boom(*_a, **_k):
         raise RuntimeError("injected")
 
+    current = tuple(manifest.resolve(eng.path)[1])
     with monkeypatch.context() as m:
-        m.setattr(eng.writer, "_read_paths", boom)
+        m.setattr(manifest, "read_files", boom)
         with pytest.raises(RuntimeError):
             eng.events()
-    assert eng.writer._snapshot is None
+    # the first append may have cached the empty log; the generation
+    # whose load failed must not be cached
+    cached = eng.writer._snapshot
+    assert cached is None or cached[0] != current
     with monkeypatch.context() as m:
         m.setattr(eng, "_derive_metadata", boom)
         with pytest.raises(RuntimeError):

@@ -924,3 +924,63 @@ def test_structural_append_validation(log):
     # structurally valid edge ids still append
     assert log.append("  ", ok) == 0
     assert log.append("$oddball", [ProposedEvent("A", "{}")]) == 0
+
+
+def test_append_df_publishes_only_its_own_files(spark, tmp_path, monkeypatch):
+    """A parquet file that lands in the log dir while append_df's Spark
+    write runs (a concurrent rewrite moving its staged files in) must not
+    join the append's generation: once the rewrite unwinds it, a
+    snapshot that names it could no longer be read."""
+    import os
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from eventstore_spark import manifest as M
+
+    path = str(tmp_path / "log")
+    w = EventLogWriter(spark, path)
+    w.append("s-1", [ProposedEvent("A")])
+    stray = os.path.join(path, "part-scavenge-1-00000.parquet")
+    real_parquet = DataFrameWriter.parquet
+
+    def write_then_drop(self, *a, **k):
+        real_parquet(self, *a, **k)
+        shutil.copy(os.path.join(path, M.snapshot_files(path)[0]), stray)
+
+    batch = spark.createDataFrame(
+        [("s-2", "B", "{}", None, "e-b")],
+        "stream_id string, event_type string, data string, "
+        "metadata string, event_id string")
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", write_then_drop)
+        w.append_df(batch)
+    assert os.path.basename(stray) not in M.snapshot_files(path)
+    os.remove(stray)  # the rewrite unwinds its file
+    rows = w.load().orderBy("log_position").collect()
+    assert [(r.stream_id, r.event_type) for r in rows] == [
+        ("s-1", "A"), ("s-2", "B")]
+    w.close()
+
+
+def test_first_appends_resolve_the_manifest_once_per_read(spark, tmp_path,
+                                                          monkeypatch):
+    """A first append to a new stream reads the current generation for
+    its stream state and its metadata: two ``manifest.latest`` calls,
+    not a second existence check before each read."""
+    from eventstore_spark import manifest as M
+    from eventstore_spark.engine import EventStoreEngine
+
+    eng = EventStoreEngine(spark, str(tmp_path / "store"))
+    calls = []
+    real_latest = M.latest
+
+    def counting(path):
+        calls.append(path)
+        return real_latest(path)
+
+    monkeypatch.setattr(M, "latest", counting)
+    for i in range(10):
+        eng.append(f"new-{i}", [ProposedEvent("E", "{}")])
+    assert len(calls) <= 20
+    eng.close()
