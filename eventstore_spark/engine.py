@@ -76,7 +76,6 @@ class EventStoreEngine:
 
     def __init__(self, spark: SparkSession, path: str,
                  lock_timeout_s: float = 0.0,
-                 group_commit_window_ms: float = 0.0,
                  system_projections: str | None = None,
                  read_only: bool = False,
                  correlation_id_property: str = "$correlationId"):
@@ -90,16 +89,15 @@ class EventStoreEngine:
         self.correlation_id_property = correlation_id_property
         # lock_timeout_s > 0: wait (bounded) for another process's writer
         # claim on this store instead of raising WriterFencedError.
-        # group_commit_window_ms > 0: batch concurrent appends into one
-        # storage commit (writer.py group commit).
+        # Concurrent appends share the writer's one commit path: whatever
+        # queues while a commit is in flight lands in the next commit file
+        # (writer.py ``append``).
         # read_only=True: open WITHOUT claiming the single-writer lock —
         # any number of analyst processes read beside the one writer
         # process (the reference's many-read-connections model); every
         # mutating call raises WriterFencedError.
         self.writer = EventLogWriter(
-            spark, path, lock_timeout_s=lock_timeout_s,
-            group_commit_window_ms=group_commit_window_ms,
-            read_only=read_only,
+            spark, path, lock_timeout_s=lock_timeout_s, read_only=read_only,
         )
         self.projections: dict[str, _ManagedProjection] = {}
         # (generation key, (metadata dimension, row count)), see

@@ -18,9 +18,9 @@ atomic columnar commit:
     so throughput scales with batch size while order stays total;
   * the single-writer invariant is ENFORCED, not just documented
     (round 5). In-process: every writer on one directory shares a
-    ``_PathCore`` (append mutex + position allocator + per-stream cache
-    generations), so two writer objects can never interleave positions
-    or serve stale stream state. Cross-process: a ``_writer.lock`` file
+    ``_PathCore`` (append mutex + position allocator + per-stream head
+    state), so two writer objects can never interleave positions or
+    serve stale stream state. Cross-process: a ``_writer.lock`` file
     carries (pid, fencing token); a live foreign holder makes writer
     construction raise ``WriterFencedError``, a dead holder's lock is
     stolen atomically, and the token is re-verified before every commit
@@ -57,6 +57,7 @@ import json
 import os
 import threading
 import uuid
+from collections import deque
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
@@ -149,23 +150,48 @@ def _category(stream_id: str) -> str | None:
 LOCK_FILE = "_writer.lock"  # underscore → invisible to Spark's file listing
 
 
+class _StreamCache:
+    """Per-stream head state: ``streams[sid]`` = [last_event_number,
+    tombstoned], ``ids[sid]`` = {event_id: event_number} over the most
+    recent IDEMPOTENCY_WINDOW events, ``meta[sid]`` = the stream's current
+    metadata document. Filled lazily per stream (the LRU-cache analog of
+    IndexBackend's last-event-number)."""
+
+    def __init__(self):
+        self.streams: dict[str, list] = {}
+        self.ids: dict[str, dict[str, int]] = {}
+        self.meta: dict[str, dict] = {}
+
+
+@dataclass
+class _QueuedAppend:
+    """One ``append()`` call waiting on the write head; whoever drains the
+    queue sets ``result`` or ``error`` before releasing the mutex."""
+
+    stream_id: str
+    events: list
+    expected: int
+    created: datetime | None
+    result: int | None = None
+    error: BaseException | None = None
+
+
 class _PathCore:
-    """Process-wide shared write head for ONE log directory.
+    """Process-wide write head for ONE log directory: every
+    ``EventLogWriter`` opened on the same directory in this process shares
+    it, as every request shares the reference's one StorageWriterService.
 
-    Every ``EventLogWriter`` opened on the same directory in this process
-    shares a core, which is what makes multiple writer OBJECTS safe:
-
-      * ``mutex`` serializes whole appends (an RLock — the soft-delete
-        recreate path re-enters ``append`` for the metastream write);
-      * ``last_position`` is the committed head every writer syncs to
-        before allocating, so positions from different writer objects
-        never collide;
-      * ``stream_gen[sid]`` bumps on every commit touching ``sid``; a
-        writer whose cached per-stream state was taken at an older
-        generation reloads from the log before trusting it;
-      * the commit condition/epoch (U3 long-poll wakeups) lives here, so
-        a waiter parked via one writer object wakes on a commit made
-        through another;
+      * ``mutex`` serializes commits and guards all head state (an RLock:
+        the commit path re-enters it through the stream-state reads);
+      * ``pending`` queues ``append()`` calls; the next mutex holder
+        commits everything queued as one file;
+      * ``last_position``, ``manifest_seq`` and ``cache`` are the head
+        state: the committed position, the manifest generation every
+        publish CASes against, and the per-stream state. They are valid
+        exactly while this process holds the fence — derived from disk when
+        it is acquired, dropped when it is released;
+      * the commit condition/epoch (U3 long-poll wakeups), so a waiter
+        parked via one writer object wakes on a commit made through another;
       * ``fence_token`` is this process's claim in the cross-process
         ``_writer.lock`` file.
     """
@@ -173,15 +199,13 @@ class _PathCore:
     def __init__(self, path: str):
         self.path = path
         self.mutex = threading.RLock()
+        self.pending: deque[_QueuedAppend] = deque()
         self.cond = threading.Condition()
         self.epoch = 0
-        self.last_position: int | None = None  # None until first recovery
-        self.stream_gen: dict[str, int] = {}
         self.fence_token: str | None = None
-        # manifest generation this process last observed/published — the
-        # base every append publish CASes against (manifest.append_files
-        # base_seq). None until the first writer on this path syncs it.
+        self.last_position: int | None = None
         self.manifest_seq: int | None = None
+        self.cache = _StreamCache()
 
 
 _CORES: dict[str, _PathCore] = {}
@@ -329,6 +353,8 @@ def _release_fence(core: _PathCore) -> None:
         except FileNotFoundError:
             pass
     core.fence_token = None
+    core.last_position = core.manifest_seq = None
+    core.cache = _StreamCache()
 
 
 class EventLogWriter:
@@ -337,7 +363,6 @@ class EventLogWriter:
     def __init__(self, spark: SparkSession, path: str,
                  max_append_size: int = DEFAULT_MAX_APPEND_SIZE,
                  lock_timeout_s: float = 0.0,
-                 group_commit_window_ms: float = 0.0,
                  read_only: bool = False):
         self.spark = spark
         self.path = path
@@ -347,50 +372,23 @@ class EventLogWriter:
         # open read-only handles while ONE process owns the append head.
         # Appends through a read-only handle raise WriterFencedError.
         self._read_only = read_only
-        # group commit (RequestManager batching): >0 gathers concurrent
-        # append() calls for this many ms and commits them as one file
-        self._group_window = group_commit_window_ms / 1000.0
-        self._group_q: list = []
-        self._group_cond = threading.Condition()
-        self._group_thread: threading.Thread | None = None
-        self._group_stop = threading.Event()
         self.max_append_size = max_append_size
         os.makedirs(path, exist_ok=True)
         # shared per-directory write head: in-process total-order +
         # cross-process fencing (see _PathCore / _acquire_fence)
         self._core = _core_for(path)
-        self._last_position = 0
-        # stream -> [last_event_number, tombstoned]; filled lazily per
-        # stream (LRU-cache analog of IndexBackend's last-event-number).
-        self._stats: dict[str, list] = {}
-        # stream -> core.stream_gen value at which _stats/_ids/_meta_cache
-        # for that stream were taken; a foreign commit bumps the core gen
-        # and invalidates this writer's cached view of the stream.
-        self._cache_gen: dict[str, int] = {}
-        # stream -> {event_id: event_number}, bounded to the most recent
-        # IDEMPOTENCY_WINDOW events per stream.
-        self._ids: dict[str, dict[str, int]] = {}
-        # stream -> current metadata DOCUMENT (parsed JSON of the latest
-        # $metadata event), lazily read from the metastream; drives
-        # soft-delete recreate. Kept current on every metastream append.
-        self._meta_cache: dict[str, dict] = {}
-        # one-entry (resolved paths, DataFrame) cache of the current log
-        # generation, see snapshot(); the lock also guards the engine's
-        # visibility table, which is keyed the same way
+        # one-entry (resolved paths, DataFrame, stream cache) entry for the
+        # current log generation, see snapshot(); the lock also guards the
+        # engine's visibility table, which is keyed the same way
         self.snapshot_lock = threading.Lock()
-        self._snapshot: tuple[tuple[str, ...], DataFrame] | None = None
+        self._snapshot: tuple[tuple[str, ...], DataFrame, _StreamCache] | None = None
         if read_only:
             return  # no fence, no recovery scan — reads resolve lazily
         with self._core.mutex:
-            _acquire_fence(self._core, timeout_s=lock_timeout_s)
-            self._recover()
-            if self._core.last_position is not None:
-                self._last_position = max(
-                    self._last_position, self._core.last_position
-                )
-            self._core.last_position = self._last_position
-            if self._core.manifest_seq is None:
-                self._core.manifest_seq = manifest.latest(path)[0]
+            if self._core.fence_token is None:
+                _acquire_fence(self._core, timeout_s=lock_timeout_s)
+            if self._core.last_position is None:  # released, or a failed recovery
+                self._recover()
 
     @property
     def read_only(self) -> bool:
@@ -398,62 +396,75 @@ class EventLogWriter:
 
     # -- recovery: one scalar read, never a full-log collect --
     def _recover(self) -> None:
+        """Derive the head state from disk once the fence is acquired: the
+        max log_position and the manifest generation. Per-stream state
+        loads on first touch."""
+        core = self._core
+        core.cache = _StreamCache()
+        core.last_position = self._durable_head()
+        core.manifest_seq = manifest.latest(self.path)[0]
+
+    def _durable_head(self) -> int:
         key, log = self.snapshot()
         if not key:  # an empty log
-            return
-        row = log.agg(F.max("log_position")).first()
-        self._last_position = int(row[0] or 0)
+            return 0
+        return int(log.agg(F.max("log_position")).first()[0] or 0)
+
+    def _state(self) -> tuple[_StreamCache, tuple | None]:
+        """(stream cache, snapshot to fill it from or None for "resolve
+        lazily"). While this process holds the fence, every commit goes
+        through the core, so its cache is authoritative and never needs a
+        manifest read on a hit. A read-only (or closed) handle caches in
+        the current snapshot entry instead: a commit by another process
+        is a new generation, whose entry starts empty."""
+        if not self._read_only and self._core.fence_token is not None:
+            return self._core.cache, None
+        key, log, cache = self._entry()
+        return cache, (key, log)
 
     def _stream_state(self, stream_id: str) -> list:
         """[last_event_number, tombstoned] for a stream, loading it from
         the log on first touch via one pruned per-stream scan bounded to
         the IDEMPOTENCY_WINDOW most recent events.
 
-        The cache is only authoritative when the id map is loaded too:
-        ``append_df`` maintains ``_stats`` (numbering) but not ``_ids``
-        (idempotency), so a stream whose ids were invalidated by a bulk
+        The state is only authoritative when the id map is loaded too:
+        ``append_df`` maintains the numbering but not the ids
+        (idempotency), so a stream whose ids were dropped by a bulk
         append reloads BOTH here — otherwise an idempotent retry through
         ``append()`` would see an empty id map and dupe or reject.
 
-        Cache validity is generation-checked against the shared core:
-        a commit to this stream through ANOTHER writer object bumps
-        ``core.stream_gen[sid]`` and forces a reload here."""
-        st = self._stats.get(stream_id)
-        if (
-            st is not None
-            and stream_id in self._ids
-            and self._cache_gen.get(stream_id, 0)
-            == self._core.stream_gen.get(stream_id, 0)
-        ):
+        Runs under the core mutex, so a fill never interleaves a commit."""
+        with self._core.mutex:
+            cache, snap = self._state()
+            st = cache.streams.get(stream_id)
+            if st is not None and stream_id in cache.ids:
+                return st
+            key, log = snap or self.snapshot()
+            rows = []
+            if key:
+                rows = (
+                    log
+                    .where(F.col("stream_id") == stream_id)
+                    .orderBy(F.col("event_number").desc())
+                    .limit(IDEMPOTENCY_WINDOW)
+                    .select("event_number", "event_id", "event_type")
+                    .collect()
+                )
+            last = int(rows[0]["event_number"]) if rows else NO_STREAM
+            # A tombstone is always the stream's final event (appends are
+            # rejected afterwards), so the bounded window always contains it.
+            tomb = bool(rows) and rows[0]["event_type"] == STREAM_DELETED_EVENT_TYPE
+            st = cache.streams[stream_id] = [last, tomb]
+            # latest position wins for a re-committed id (rows arrive DESC;
+            # build ASC so the most recent commit overwrites) — matches
+            # _remember_id's append-time bookkeeping
+            cache.ids[stream_id] = {
+                r["event_id"]: int(r["event_number"]) for r in reversed(rows)
+            }
             return st
-        rows = []
-        key, log = self.snapshot()
-        if key:
-            rows = (
-                log
-                .where(F.col("stream_id") == stream_id)
-                .orderBy(F.col("event_number").desc())
-                .limit(IDEMPOTENCY_WINDOW)
-                .select("event_number", "event_id", "event_type")
-                .collect()
-            )
-        last = int(rows[0]["event_number"]) if rows else NO_STREAM
-        # A tombstone is always the stream's final event (appends are
-        # rejected afterwards), so the bounded window always contains it.
-        tomb = bool(rows) and rows[0]["event_type"] == STREAM_DELETED_EVENT_TYPE
-        st = [last, tomb]
-        self._stats[stream_id] = st
-        # latest position wins for a re-committed id (rows arrive DESC;
-        # build ASC so the most recent commit overwrites) — matches
-        # _remember_id's append-time bookkeeping
-        self._ids[stream_id] = {
-            r["event_id"]: int(r["event_number"]) for r in reversed(rows)
-        }
-        self._cache_gen[stream_id] = self._core.stream_gen.get(stream_id, 0)
-        return st
 
     def _remember_id(self, stream_id: str, event_id: str, event_number: int) -> None:
-        known = self._ids.setdefault(stream_id, {})
+        known = self._core.cache.ids.setdefault(stream_id, {})
         known[event_id] = event_number
         if len(known) > 2 * IDEMPOTENCY_WINDOW:  # trim to the recent window
             cutoff = event_number - IDEMPOTENCY_WINDOW
@@ -520,7 +531,7 @@ class EventLogWriter:
             # (StorageWriterService.cs:688-691); a first-position miss
             # with NoStream on a soft-deleted stream → Ok (the recreate
             # path, CheckCommit:255-256).
-            known = self._ids.get(stream_id, {})
+            known = self._core.cache.ids.get(stream_id, {})
             if expected < last and events:
                 for i, ev in enumerate(events):
                     if known.get(ev.event_id) == expected + 1 + i:
@@ -545,7 +556,7 @@ class EventLogWriter:
         # commit again at new positions); known first id requires every
         # id known → idempotent with the replayed batch's own end
         # position, else CorruptedIdempotency → WrongExpectedVersion
-        known = self._ids.get(stream_id, {})
+        known = self._core.cache.ids.get(stream_id, {})
         if events and events[0].event_id in known:
             if all(ev.event_id in known for ev in events):
                 return ("idempotent", known[events[-1].event_id])
@@ -562,39 +573,34 @@ class EventLogWriter:
     def _current_meta(self, stream_id: str) -> dict:
         """The stream's current metadata document (latest $metadata event of
         `$$stream`, whole-document semantics — a metadata write REPLACES the
-        document, StreamMetadata.cs:60-150), lazily read and cached; the
-        cache invalidates when another writer commits to the metastream
-        (generation check on `$$stream` against the shared core)."""
-        meta_id = f"$${stream_id}"
-        meta_gen_key = f"meta:{stream_id}"
-        if (
-            stream_id in self._meta_cache
-            and self._cache_gen.get(meta_gen_key, 0)
-            == self._core.stream_gen.get(meta_id, 0)
-        ):
-            return self._meta_cache[stream_id]
-        doc: dict = {}
-        key, log = self.snapshot()
-        if key:
-            rows = (
-                log
-                .where(
-                    (F.col("stream_id") == meta_id)
-                    & (F.col("event_type") == METADATA_EVENT_TYPE)
+        document, StreamMetadata.cs:60-150), lazily read and cached beside
+        the stream state (see ``_state``); a metastream append keeps it
+        current."""
+        with self._core.mutex:
+            cache, snap = self._state()
+            if stream_id in cache.meta:
+                return cache.meta[stream_id]
+            key, log = snap or self.snapshot()
+            doc: dict = {}
+            if key:
+                rows = (
+                    log
+                    .where(
+                        (F.col("stream_id") == f"$${stream_id}")
+                        & (F.col("event_type") == METADATA_EVENT_TYPE)
+                    )
+                    .orderBy(F.col("event_number").desc())
+                    .limit(1)
+                    .select("data")
+                    .collect()
                 )
-                .orderBy(F.col("event_number").desc())
-                .limit(1)
-                .select("data")
-                .collect()
-            )
-            if rows and rows[0]["data"]:
-                try:
-                    doc = json.loads(rows[0]["data"]) or {}
-                except ValueError:
-                    doc = {}
-        self._meta_cache[stream_id] = doc
-        self._cache_gen[meta_gen_key] = self._core.stream_gen.get(meta_id, 0)
-        return doc
+                if rows and rows[0]["data"]:
+                    try:
+                        doc = json.loads(rows[0]["data"]) or {}
+                    except ValueError:
+                        doc = {}
+            cache.meta[stream_id] = doc
+            return doc
 
     def append(
         self,
@@ -611,19 +617,12 @@ class EventLogWriter:
         the first new event number so the old events stay invisible while
         the new ones show.
 
-        Serialized through the shared per-directory mutex; the fencing
-        token is verified BEFORE any state moves, and a failed/fenced
-        commit rolls the touched streams' in-memory state back to the
-        durable log, so numbering stays intact for the retry.
-
-        With ``group_commit_window_ms`` > 0, concurrent ``append()``
-        calls are gathered by a collector thread and committed as ONE
-        parquet file + ONE manifest publish — the group-commit of the
-        reference's RequestManager pipeline (many in-flight appends, one
-        storage write), amortizing the per-commit parquet write and
-        manifest publish across callers (the commit path issues no
-        fsync). Results (and per-append errors such as
-        WrongExpectedVersion) resolve per caller.
+        The call queues on the shared write head and takes its mutex; the
+        first caller to get it commits everything queued by then as ONE
+        parquet file and ONE manifest publish (see ``_commit_group``), the
+        reference's RequestManager pipeline of many in-flight appends per
+        storage write. A lone caller commits alone. Per-append rejections
+        such as WrongExpectedVersion raise only in their own caller.
         """
         if self._read_only:
             raise WriterFencedError(
@@ -631,40 +630,31 @@ class EventLogWriter:
                 "the owning writer process"
             )
         self._validate_append(stream_id, events, expected_version)
-        if self._group_window > 0:
-            return self._append_grouped(stream_id, events, expected_version, created)
-        with self._core.mutex:
-            _verify_fence(self._core)
-            rows: list[tuple] = []
-            touched: set[str] = set()
-            try:
-                last = self._apply_append(
-                    stream_id, events, expected_version, created, rows, touched
-                )
-            except BaseException:
-                if touched:  # mid-apply failure → restore from the log
-                    self._rollback(touched)
-                raise
-            if rows:
-                try:
-                    self._commit(rows)
-                except BaseException:
-                    self._rollback(touched)
-                    raise
-            return last
+        self._validate_sizes(events)
+        item = _QueuedAppend(stream_id, events, expected_version, created)
+        core = self._core
+        core.pending.append(item)
+        with core.mutex:
+            # a previous holder drained and resolved the item, or it is
+            # still queued and this caller commits the queue
+            if item.result is None and item.error is None:
+                batch = []
+                while core.pending:
+                    batch.append(core.pending.popleft())
+                self._commit_group(batch)
+        if item.error is not None:
+            raise item.error
+        return item.result
 
     def _apply_append(self, stream_id, events, expected_version, created,
                       rows_sink: list, touched: set) -> int:
-        """Check one append and APPLY it to in-memory state, emitting its
-        rows into ``rows_sink`` for the caller to commit (possibly merged
-        with other appends' rows — group commit). All validations run
-        BEFORE any mutation, so a rejected append never dirties state;
-        after a failed physical commit the caller rolls ``touched``
-        streams back to the durable log via ``_rollback``."""
-        self._last_position = max(
-            self._last_position, self._core.last_position or 0
-        )
-        self._validate_sizes(events)
+        """Check one append and APPLY it to the head state, emitting its
+        rows into ``rows_sink`` for the caller to commit merged with the
+        rest of its group. All validations run BEFORE any mutation, so a
+        rejected append never dirties state; after a failed physical
+        commit the caller rolls ``touched`` streams back to the durable
+        log via ``_rollback``."""
+        core = self._core
         decision = self._check(stream_id, events, expected_version)
         if decision != "ok":
             return decision[1]  # ("idempotent", batch's own end number)
@@ -672,6 +662,7 @@ class EventLogWriter:
         st = self._stream_state(stream_id)
         touched.add(stream_id)
         last = st[0]
+        pos = core.last_position
         # once _check said "ok" the WHOLE batch commits fresh — the
         # reference never partially skips rows inside one transaction
         # (CheckCommit:204-233: a known id after an unknown FIRST id is
@@ -679,36 +670,34 @@ class EventLogWriter:
         # later unknown one was already rejected as CorruptedIdempotency)
         first_new = None
         for ev in events:
-            self._last_position += 1
+            pos += 1
             last += 1
             if first_new is None:
                 first_new = last
             self._remember_id(stream_id, ev.event_id, last)
             rows_sink.append(
                 (
-                    self._last_position, stream_id, _category(stream_id), last,
+                    pos, stream_id, _category(stream_id), last,
                     ev.event_id, ev.event_type, ev.data, ev.metadata, now, ev.is_json,
                 )
             )
             if ev.event_type == STREAM_DELETED_EVENT_TYPE:
                 st[1] = True
         st[0] = last
-        self._core.last_position = self._last_position
+        core.last_position = pos
         if first_new is not None:
-            self._bump_stream_gen(stream_id)
             # keep the metadata cache current: a $metadata append to `$$X`
             # REPLACES X's document (the reference's GetStreamRawMeta always
             # reads the latest; a stale cached $tb would mis-trigger
             # recreate after set_stream_metadata overwrote it).
             if stream_id.startswith("$$"):
-                orig = stream_id[2:]
                 for ev in events:
                     if ev.event_type == METADATA_EVENT_TYPE:
                         try:
                             doc = json.loads(ev.data or "{}") or {}
                         except ValueError:
                             doc = {}
-                        self._set_meta_cache(orig, doc)
+                        core.cache.meta[stream_id[2:]] = doc
             # soft-delete recreate: a stream whose $tb == MAX_LONG comes
             # back to life on append — rewrite $tb to the first new number,
             # PRESERVING the rest of the metadata document
@@ -728,136 +717,47 @@ class EventLogWriter:
 
     def _rollback(self, touched: set) -> None:
         """A physical commit failed after state was applied: restore the
-        in-memory view from the DURABLE log — drop the touched streams'
-        caches (they reload lazily), bump their shared generations so
-        sibling writer objects drop theirs too, and re-read the committed
-        head position."""
+        head state from the DURABLE log — drop the touched streams' state
+        (it reloads lazily) and re-read the committed head position."""
+        cache = self._core.cache
         for sid in touched:
-            self._stats.pop(sid, None)
-            self._ids.pop(sid, None)
-            self._cache_gen.pop(sid, None)
-            self._core.stream_gen[sid] = self._core.stream_gen.get(sid, 0) + 1
+            cache.streams.pop(sid, None)
+            cache.ids.pop(sid, None)
             if sid.startswith("$$"):
-                self._meta_cache.pop(sid[2:], None)
-                self._cache_gen.pop(f"meta:{sid[2:]}", None)
-        self._last_position = 0
-        self._recover()
-        self._core.last_position = self._last_position
+                cache.meta.pop(sid[2:], None)
+        self._core.last_position = self._durable_head()
 
-    # -- group commit (RequestManager batching analog) --
-    def _append_grouped(self, stream_id, events, expected_version, created) -> int:
-        box: dict = {"done": threading.Event()}
-        with self._group_cond:
-            # append() after close() must FAIL like the non-grouped path
-            # does (via _verify_fence), not park forever on a collector
-            # that exited (ADVICE r5)
-            if self._group_stop.is_set():
-                raise WriterFencedError(
-                    f"writer for {self.path} was closed — open a new "
-                    "EventLogWriter"
-                )
-            self._group_q.append((stream_id, events, expected_version, created, box))
-            if self._group_thread is None or not self._group_thread.is_alive():
-                self._group_thread = threading.Thread(
-                    target=self._collector_loop, daemon=True
-                )
-                self._group_thread.start()
-            self._group_cond.notify_all()
-        box["done"].wait()
-        if "error" in box:
-            raise box["error"]
-        return box["result"]
-
-    def _drain_group_queue(self) -> None:
-        """Fail any queued appends instead of leaving their callers
-        parked (the close()-races-enqueue window: the up-front stop check
-        in _append_grouped can pass just before close() sets the flag)."""
-        with self._group_cond:
-            leftover, self._group_q[:] = list(self._group_q), []
-        for *_ignored, box in leftover:
-            if not box["done"].is_set():
-                box.setdefault(
-                    "error",
-                    WriterFencedError(
-                        f"writer for {self.path} was closed — open a new "
-                        "EventLogWriter"
-                    ),
-                )
-                box["done"].set()
-
-    def _collector_loop(self) -> None:
-        import time as _time
-
-        while not self._group_stop.is_set():
-            with self._group_cond:
-                while not self._group_q and not self._group_stop.is_set():
-                    self._group_cond.wait(timeout=0.5)
-                if self._group_stop.is_set() and not self._group_q:
-                    return
-            _time.sleep(self._group_window)  # gather the group
-            with self._group_cond:
-                batch = list(self._group_q)
-                self._group_q.clear()
-            try:
-                with self._core.mutex:
-                    self._commit_group(batch)
-            finally:
-                # the collector must NEVER leave a caller parked: any
-                # box not resolved by _commit_group (unexpected error)
-                # fails loudly instead of hanging its append()
-                for *_ignored, box in batch:
-                    if not box["done"].is_set():
-                        box.setdefault(
-                            "error",
-                            RuntimeError("group commit failed unexpectedly"),
-                        )
-                        box["done"].set()
-        self._drain_group_queue()  # stop raced an enqueue — fail it loudly
-
-    def _commit_group(self, batch: list) -> None:
+    def _commit_group(self, batch: list[_QueuedAppend]) -> None:
+        """Check, apply and commit a drained queue as one file, under the
+        mutex. Every item leaves with a result or an error: a rejection
+        (nothing applied yet) fails only its own caller; a fenced writer, a
+        MID-APPLY failure (state half-applied, later appends would check
+        against it) or a failed commit fails the whole group, commits
+        nothing and restores the head state from the durable log."""
         rows: list[tuple] = []
         touched: set[str] = set()
         try:
             _verify_fence(self._core)
-        except BaseException as e:
-            for *_ignored, box in batch:
-                box["error"] = e
-                box["done"].set()
-            return
-        aborted = None
-        for sid, events, expected, created, box in batch:
-            if aborted is not None:
-                box["error"] = aborted
-                continue
-            rows_before, touched_before = len(rows), set(touched)
-            try:
-                box["result"] = self._apply_append(
-                    sid, events, expected, created, rows, touched
-                )
-            except BaseException as e:
-                if len(rows) > rows_before or touched != touched_before:
-                    # MID-APPLY failure (infrastructure, not a rejection):
-                    # state for this append is half-applied and later
-                    # appends would check against it — abort the whole
-                    # group, restore from the durable log, commit nothing
-                    del rows[rows_before:]
-                    self._rollback(touched)
-                    aborted = e
-                box["error"] = e  # rejection, or first aborted append
-        if aborted is not None:
-            for *_ignored, box in batch:
-                box.pop("result", None)
-                box.setdefault("error", aborted)
-        if rows and aborted is None:
-            try:
+            for item in batch:
+                rows_before, touched_before = len(rows), len(touched)
+                try:
+                    item.result = self._apply_append(
+                        item.stream_id, item.events, item.expected,
+                        item.created, rows, touched,
+                    )
+                except BaseException as e:
+                    if len(rows) > rows_before or len(touched) > touched_before:
+                        raise
+                    item.error = e
+            if rows:
                 self._commit(rows)
-            except BaseException as e:
+        except BaseException as e:
+            for item in batch:
+                item.result = None
+                if item.error is None:
+                    item.error = e
+            if touched:
                 self._rollback(touched)
-                for *_ignored, box in batch:
-                    box.pop("result", None)
-                    box.setdefault("error", e)
-        for *_ignored, box in batch:
-            box["done"].set()
 
     def _publish_append(self, names: list[str]) -> None:
         """Publish an append commit's files to the manifest as a CAS
@@ -882,21 +782,6 @@ class EventLogWriter:
                 if attempts >= 8:
                     raise
                 self._core.manifest_seq = manifest.latest(self.path)[0]
-
-    def _bump_stream_gen(self, stream_id: str) -> None:
-        """Record a commit touching ``stream_id`` in the shared core and
-        mark this writer's own caches as taken at the new generation."""
-        gen = self._core.stream_gen.get(stream_id, 0) + 1
-        self._core.stream_gen[stream_id] = gen
-        self._cache_gen[stream_id] = gen
-        if stream_id.startswith("$$"):
-            self._cache_gen[f"meta:{stream_id[2:]}"] = gen
-
-    def _set_meta_cache(self, stream_id: str, doc: dict) -> None:
-        self._meta_cache[stream_id] = doc
-        self._cache_gen[f"meta:{stream_id}"] = self._core.stream_gen.get(
-            f"$${stream_id}", 0
-        )
 
     def append_df(self, batch: DataFrame, created: datetime | None = None) -> None:
         """Bulk path: append pre-shaped envelope rows (stream_id,
@@ -928,9 +813,8 @@ class EventLogWriter:
 
     def _append_df_locked(self, batch: DataFrame, created) -> None:
         _verify_fence(self._core)
-        self._last_position = max(
-            self._last_position, self._core.last_position or 0
-        )
+        core = self._core
+        cache = core.cache
         order_cols = [
             c for c in ("source_log_position", "emit_seq") if c in batch.columns
         ]
@@ -969,18 +853,8 @@ class EventLogWriter:
             if not counts:
                 return
             touched = sorted(r["stream_id"] for r in counts)
-            # one batched job fills last-event-number for cold streams; a
-            # stream cached at an older shared generation (written through
-            # another writer object) counts as cold and reloads
-            missing = [
-                s for s in touched
-                if s not in self._stats
-                or self._cache_gen.get(s, 0) != self._core.stream_gen.get(s, 0)
-            ]
-            for s in missing:  # drop stale views before the reload
-                self._stats.pop(s, None)
-                self._ids.pop(s, None)
-                self._cache_gen[s] = self._core.stream_gen.get(s, 0)
+            # one batched job fills last-event-number for cold streams
+            missing = [s for s in touched if s not in cache.streams]
             if missing and key:
                 got = (
                     log
@@ -995,14 +869,14 @@ class EventLogWriter:
                     .collect()
                 )
                 for r in got:
-                    self._stats[r["stream_id"]] = [int(r["last"]), bool(r["tomb"])]
+                    cache.streams[r["stream_id"]] = [int(r["last"]), bool(r["tomb"])]
             # tombstoned streams drop their rows silently below, so they
             # must not trip the size guard either: an oversize event bound
             # for a deleted stream was never going to commit, and aborting
             # the whole batch for it would fail every LIVE stream's rows
             live = [
                 r for r in counts
-                if not self._stats.setdefault(r["stream_id"], [NO_STREAM, False])[1]
+                if not cache.streams.setdefault(r["stream_id"], [NO_STREAM, False])[1]
             ]
             oversized = [r for r in live if int(r["max_size"] or 0) > MAX_RECORD_SIZE]
             if oversized:
@@ -1012,9 +886,9 @@ class EventLogWriter:
                 )
             by_stream = {r["stream_id"]: int(r["count"]) for r in live}
             alloc = []  # (stream_id, en_base, pos_base)
-            new_last = self._last_position
+            new_last = core.last_position
             for sid in sorted(by_stream):
-                st = self._stats[sid]
+                st = cache.streams[sid]
                 alloc.append((sid, st[0], new_last))
                 new_last += by_stream[sid]
             if not alloc:
@@ -1051,18 +925,17 @@ class EventLogWriter:
             out.write.parquet(staging)
             self._publish_append(manifest.move_in(
                 self.path, staging,
-                f"part-bulk-{self._last_position + 1:020d}-{uuid.uuid4().hex[:8]}",
+                f"part-bulk-{core.last_position + 1:020d}-{uuid.uuid4().hex[:8]}",
             ))
             # the write committed — only now advance the numbering state
-            self._last_position = self._core.last_position = new_last
+            core.last_position = new_last
             for sid, en_base, _pos in alloc:
-                self._stats[sid][0] = en_base + by_stream[sid]
+                cache.streams[sid][0] = en_base + by_stream[sid]
                 # the bulk path doesn't know which event_ids landed per
                 # stream (collecting them would be one row per EVENT);
                 # invalidate the id map so the next append() reloads it
                 # from the log and idempotent retries keep working.
-                self._ids.pop(sid, None)
-                self._bump_stream_gen(sid)
+                cache.ids.pop(sid, None)
             self._notify_commit()
         finally:
             b.unpersist()
@@ -1133,18 +1006,13 @@ class EventLogWriter:
         the log directory (all in-process writer objects share the claim
         via the _PathCore). A crashed process needs no close — its lock is
         detected stale by pid-liveness and stolen by the next writer.
-        Drops the cached snapshot DataFrame."""
+        Drops the cached snapshot DataFrame, and with the claim the shared
+        head state."""
         with self.snapshot_lock:
             self._snapshot = None
         if self._read_only:
             return  # never held the fence — and must not release the
             # owning writer's claim through the shared core
-        self._group_stop.set()
-        with self._group_cond:
-            self._group_cond.notify_all()
-        if self._group_thread is not None:
-            self._group_thread.join(timeout=5)
-        self._drain_group_queue()  # never leave an enqueued caller parked
         with self._core.mutex:
             _release_fence(self._core)
 
@@ -1201,7 +1069,6 @@ class EventLogWriter:
             f"$${stream_id}",
             [ProposedEvent(METADATA_EVENT_TYPE, data=f'{{"$tb": {MAX_LONG}}}')],
         )
-        self._set_meta_cache(stream_id, {"$tb": MAX_LONG})
 
     def hard_delete(self, stream_id: str) -> None:
         """Tombstone: a $streamDeleted event; stream can never be recreated."""
@@ -1229,14 +1096,19 @@ class EventLogWriter:
     def snapshot(self) -> tuple[tuple[str, ...], DataFrame]:
         """``(key, load())``: the key is the tuple of resolved paths of
         the current generation; an empty key is an empty log."""
+        return self._entry()[:2]
+
+    def _entry(self) -> tuple[tuple[str, ...], DataFrame, _StreamCache]:
+        """The current generation's cache entry: ``snapshot()`` plus the
+        stream cache a handle without the fence fills (see ``_state``)."""
         key = tuple(manifest.resolve(self.path)[1])
         with self.snapshot_lock:
             if self._snapshot is not None and self._snapshot[0] == key:
                 return self._snapshot
-        snap = key, manifest.read_files(self.spark, key)
+        entry = key, manifest.read_files(self.spark, key), _StreamCache()
         with self.snapshot_lock:
-            self._snapshot = snap
-        return snap
+            self._snapshot = entry
+        return entry
 
     def load_at(self, seq: int) -> DataFrame:
         """Time travel: the log as of manifest generation ``seq`` (see

@@ -183,12 +183,14 @@ def test_lazy_recovery_reads_one_scalar(spark, tmp_path):
     w1 = EventLogWriter(spark, path)
     for i in range(5):
         w1.append(f"s-{i}", [ProposedEvent("A"), ProposedEvent("B")])
+    w1.close()  # writers in one process share the head; start it cold
     w2 = EventLogWriter(spark, path)
-    assert w2._last_position == 10
-    assert w2._stats == {}  # nothing preloaded
+    assert w2._core.last_position == 10
+    assert w2._core.cache.streams == {}  # nothing preloaded
     w2.append("s-3", [ProposedEvent("C")], expected_version=1)
-    assert set(w2._stats) == {"s-3"}  # only the touched stream was loaded
-    assert w2._stats["s-3"][0] == 2
+    # only the touched stream was loaded
+    assert set(w2._core.cache.streams) == {"s-3"}
+    assert w2._core.cache.streams["s-3"][0] == 2
 
 
 def test_append_df_is_distributed_and_exactly_once(spark, tmp_path):
@@ -278,11 +280,11 @@ def test_fence_takeover_fails_commit_without_corruption(spark, tmp_path):
     path = str(tmp_path / "log")
     w = EventLogWriter(spark, path)
     w.append("s-1", [ProposedEvent("A")])
-    pos_before = w._last_position
+    pos_before = w._core.last_position
     _write_lock(path, pid=1, token="stolen")  # foreign claim on disk
     with pytest.raises(WriterFencedError):
         w.append("s-1", [ProposedEvent("B")])
-    assert w._last_position == pos_before  # staged, not applied
+    assert w._core.last_position == pos_before  # staged, not applied
     assert w.load().count() == 1
 
 
@@ -296,7 +298,7 @@ def test_in_process_writers_share_total_order(spark, tmp_path):
     w1.append("a-1", [ProposedEvent("A")])          # a-1 #0, pos 1
     w2.append("b-1", [ProposedEvent("B")])          # b-1 #0, pos 2
     w2.append("a-1", [ProposedEvent("C")], expected_version=0)  # a-1 #1, pos 3
-    # w1's cached view of a-1 was invalidated by w2's commit
+    # w1 sees w2's commit to a-1 through the shared head state
     last = w1.append("a-1", [ProposedEvent("D")], expected_version=1)
     assert last == 2
     rows = w1.load().orderBy("log_position").collect()
@@ -404,46 +406,59 @@ def test_fencing_wait_mode_acquires_after_release(spark, tmp_path):
     assert w2.append("s-1", [ProposedEvent("B")], expected_version=0) == 1
 
 
+def _run_queued(w, calls):
+    """Run each call on its own thread while the test holds the write
+    head's mutex; release it once every call is queued, so the first
+    thread to take the mutex commits them all as ONE group."""
+    import threading
+    import time as _t
+
+    threads = [threading.Thread(target=c) for c in calls]
+    with w._core.mutex:
+        for t in threads:
+            t.start()
+        deadline = _t.monotonic() + 30
+        while len(w._core.pending) < len(calls) and _t.monotonic() < deadline:
+            _t.sleep(0.01)
+        assert len(w._core.pending) == len(calls)
+    for t in threads:
+        t.join(timeout=60)
+    assert all(not t.is_alive() for t in threads)  # nobody hangs
+
+
 def test_group_commit_batches_concurrent_appends(spark, tmp_path):
     """Group commit (the reference RequestManager's many-in-flight-one-
-    storage-write shape): concurrent appends through the collector land
-    in FEWER commit files than appends, with the total order and
+    storage-write shape): appends that queue while a commit holds the
+    write head land in ONE commit file, with the total order and
     per-stream numbering exactly as if appended sequentially."""
-    import os as _os
-    import threading
+    from eventstore_spark import manifest as M
 
     path = str(tmp_path / "log")
-    w = EventLogWriter(spark, path, group_commit_window_ms=40)
-    per_thread, n_threads = 8, 4
+    w = EventLogWriter(spark, path)
+    w.append("seed-1", [ProposedEvent("E")])
+    files_before = len(M.data_files(path))
+    n_streams, per_stream = 4, 2
 
-    def run(tid):
-        for i in range(per_thread):
-            w.append(f"s-{tid}", [ProposedEvent("E", f'{{"i": {i}}}')])
+    def call(sid, i):
+        return lambda: w.append(sid, [ProposedEvent("E", f'{{"i": {i}}}')])
 
-    threads = [threading.Thread(target=run, args=(t,)) for t in range(n_threads)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    n = per_thread * n_threads
+    _run_queued(w, [call(f"s-{i % n_streams}", i)
+                    for i in range(n_streams * per_stream)])
+    assert len(M.data_files(path)) == files_before + 1  # one commit
+    n = n_streams * per_stream + 1
     rows = w.load().collect()
-    assert len(rows) == n
     assert sorted(r.log_position for r in rows) == list(range(1, n + 1))
-    for tid in range(n_threads):
-        nums = sorted(r.event_number for r in rows if r.stream_id == f"s-{tid}")
-        assert nums == list(range(per_thread))
-    files = [f for f in _os.listdir(path) if f.endswith(".parquet")]
-    assert len(files) < n  # appends actually grouped
+    for s in range(n_streams):
+        nums = sorted(r.event_number for r in rows if r.stream_id == f"s-{s}")
+        assert nums == list(range(per_stream))
     w.close()
 
 
 def test_group_commit_isolates_per_append_errors(spark, tmp_path):
     """A rejected append inside a group (wrong expected version) errors
     only its caller; group-mates commit normally."""
-    import threading
-
     path = str(tmp_path / "log")
-    w = EventLogWriter(spark, path, group_commit_window_ms=40)
+    w = EventLogWriter(spark, path)
     w.append("s-1", [ProposedEvent("A")])
     results = {}
 
@@ -457,11 +472,7 @@ def test_group_commit_isolates_per_append_errors(spark, tmp_path):
         except WrongExpectedVersionError:
             results["bad"] = "raised"
 
-    ts = [threading.Thread(target=good), threading.Thread(target=bad)]
-    for t in ts:
-        t.start()
-    for t in ts:
-        t.join()
+    _run_queued(w, [good, bad])
     assert results == {"good": 0, "bad": "raised"}
     assert w.load().count() == 2  # A and B, no C
     # idempotency/numbering still coherent after the mixed group
@@ -473,7 +484,7 @@ def test_group_commit_soft_delete_recreate_in_group(spark, tmp_path):
     """The recreate path's metastream write joins the SAME group commit
     (one file for stream rows + $tb rewrite)."""
     path = str(tmp_path / "log")
-    w = EventLogWriter(spark, path, group_commit_window_ms=30)
+    w = EventLogWriter(spark, path)
     w.append("s-1", [ProposedEvent("A")])
     w.soft_delete("s-1")
     last = w.append("s-1", [ProposedEvent("B")])
@@ -494,10 +505,8 @@ def test_group_commit_mid_apply_failure_aborts_group_cleanly(spark, tmp_path, mo
     whole group: nothing commits, every caller gets the error (none
     hang), and the writer recovers — the next appends work and numbering
     continues from the durable log."""
-    import threading
-
     path = str(tmp_path / "log")
-    w = EventLogWriter(spark, path, group_commit_window_ms=40)
+    w = EventLogWriter(spark, path)
     w.append("s-1", [ProposedEvent("A")])  # durable baseline
 
     orig = EventLogWriter._current_meta
@@ -523,14 +532,7 @@ def test_group_commit_mid_apply_failure_aborts_group_cleanly(spark, tmp_path, mo
         except RuntimeError:
             errs.append(("boom-1", "RuntimeError"))
 
-    ts = [threading.Thread(target=good, args=("s-2",)),
-          threading.Thread(target=bad),
-          threading.Thread(target=good, args=("s-3",))]
-    for t in ts:
-        t.start()
-    for t in ts:
-        t.join(timeout=30)
-    assert all(not t.is_alive() for t in ts)  # nobody hangs
+    _run_queued(w, [lambda: good("s-2"), bad, lambda: good("s-3")])
     # the poisoned append definitely failed; group-mates either aborted
     # with it (same group) or committed (different group) — but the LOG
     # is consistent either way
@@ -552,12 +554,11 @@ def test_group_commit_mid_apply_failure_aborts_group_cleanly(spark, tmp_path, mo
 
 
 def test_group_commit_append_after_close_fails_fast(spark, tmp_path):
-    """append() on a CLOSED group-commit writer raises WriterFencedError
-    immediately (the non-grouped path's behavior) instead of parking
-    forever on a collector that exited (ADVICE r5)."""
+    """append() on a CLOSED writer raises WriterFencedError immediately
+    instead of parking on the write head (ADVICE r5)."""
     from eventstore_spark.writer import WriterFencedError
 
-    w = EventLogWriter(spark, str(tmp_path / "gclose"), group_commit_window_ms=30)
+    w = EventLogWriter(spark, str(tmp_path / "gclose"))
     w.append("s-1", [ProposedEvent("A")])
     w.close()
     with pytest.raises(WriterFencedError):
@@ -710,6 +711,104 @@ def test_read_only_engine_cross_process(spark, tmp_path):
     eng.close()
 
 
+def _foreign_commit(path, rows):
+    """Publish ``rows`` (EVENTS_SCHEMA order, ``created`` filled in) the
+    way another writer process would: one parquet file in the log
+    directory plus a manifest publish on top of the latest generation."""
+    import os as _os
+    import uuid as _uuid
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from eventstore_spark import manifest as M
+
+    schema = pa.schema([
+        ("log_position", pa.int64()), ("stream_id", pa.string()),
+        ("category", pa.string()), ("event_number", pa.int64()),
+        ("event_id", pa.string()), ("event_type", pa.string()),
+        ("data", pa.string()), ("metadata", pa.string()),
+        ("created", pa.timestamp("us", tz="UTC")), ("is_json", pa.bool_()),
+    ])
+    now = datetime.now(timezone.utc)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, (*r[:8], now, r[8]))) for r in rows],
+        schema=schema,
+    )
+    name = f"part-foreign-{_uuid.uuid4().hex[:8]}.parquet"
+    pq.write_table(table, _os.path.join(path, name))
+    M.append_files(path, [name], base_seq=M.latest(path)[0])
+
+
+def test_read_only_engine_follows_foreign_commits(spark, tmp_path):
+    """A read-only handle keeps its stream state per generation: after
+    another process commits, a newly written stream reads as Success and
+    a stream it hard-deleted raises StreamDeletedError — the same
+    answers a freshly opened read-only engine gives."""
+    from eventstore_spark.engine import EventStoreEngine
+
+    path = str(tmp_path / "rofollow")
+    w = EventLogWriter(spark, path)
+    w.append("gone-1", [ProposedEvent("Noted", "{}")])  # position 1
+    w.close()
+    ro = EventStoreEngine(spark, path, read_only=True)
+    assert ro.read_stream_page("acct-9").result == "NoStream"
+    assert ro.read_stream_page("gone-1").result == "Success"
+    _foreign_commit(path, [
+        (2, "acct-9", "acct", 0, "f-1", "Opened", "{}", None, True),
+        (3, "gone-1", "gone", 1, "f-2", "$streamDeleted", None, None, False),
+    ])
+    page = ro.read_stream_page("acct-9")
+    assert page.result == "Success" and page.events.count() == 1
+    with pytest.raises(StreamDeletedError):
+        ro.read_stream_page("gone-1")
+    ro.close()
+
+
+def test_stream_state_fill_never_interleaves_a_commit(spark, tmp_path, monkeypatch):
+    """A reader that loads a stream's state from a snapshot taken BEFORE
+    an append must not install it after the append committed: event
+    numbers stay dense. The reader's snapshot is held until the append
+    returns (or 3 s pass, when the append waits for the reader)."""
+    import sys
+    import threading
+
+    from eventstore_spark.engine import EventStoreEngine
+
+    path = str(tmp_path / "race")
+    w = EventLogWriter(spark, path)
+    w.append("s-1", [ProposedEvent("E") for _ in range(5)])  # 0..4
+    w.close()
+    eng = EventStoreEngine(spark, path)
+    taken, appended = threading.Event(), threading.Event()
+    orig = EventLogWriter.snapshot
+
+    def held(self):
+        snap = orig(self)
+        caller = sys._getframe(1).f_code.co_name
+        if (threading.current_thread().name == "reader"
+                and caller == "_stream_state" and not taken.is_set()):
+            taken.set()
+            appended.wait(timeout=3)
+        return snap
+
+    monkeypatch.setattr(EventLogWriter, "snapshot", held)
+    reader = threading.Thread(
+        target=lambda: eng.read_stream_page("s-1"), name="reader")
+    reader.start()
+    assert taken.wait(timeout=120)
+    assert eng.append("s-1", [ProposedEvent("E")]) == 5
+    appended.set()
+    reader.join(timeout=120)
+    assert not reader.is_alive()
+    assert eng.append("s-1", [ProposedEvent("E")]) == 6
+    nums = [r.event_number for r in
+            eng.writer.load().where("stream_id = 's-1'").collect()]
+    assert sorted(nums) == list(range(7))
+    eng.close()
+
+
 # ---------------------------------------------------------------------------
 # Round 8 storage-core review: commit-check reference parity
 # ---------------------------------------------------------------------------
@@ -743,7 +842,7 @@ def test_idempotent_replay_reports_batch_own_positions(log):
     assert log.append("s-2", evs, expected_version=-1) == 1
     for i in range(4):
         log.append("s-2", [ProposedEvent("C", "{}")])
-    assert log._stats["s-2"][0] == 5
+    assert log._core.cache.streams["s-2"][0] == 5
     # delayed retry of the original batch: same expected, same ids
     assert log.append("s-2", evs, expected_version=-1) == 1  # NOT 5
     # ANY-mode full-dedupe replay also reports the batch's own end

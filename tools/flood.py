@@ -5,6 +5,7 @@ WriteFloodProcessor.cs:196-209, ReadFloodProcessor.cs:144-155), which print
 
 Usage:
     python tools/flood.py wrfl [streams] [events_per_stream] [payload_bytes]
+    python tools/flood.py wrflg [clients] [appends_per_client] [payload_bytes]
     python tools/flood.py rdfl [reads]
     python tools/flood.py bulk [rows]        # append_df distributed path
 
@@ -24,6 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from eventstore_spark import manifest
 from eventstore_spark.session import get_spark
 from eventstore_spark.writer import EventLogWriter, ProposedEvent
 
@@ -53,16 +55,15 @@ def wrfl(spark, streams: int = 20, per_stream: int = 10, size: int = 256) -> Non
 
 
 def wrflg(spark, clients: int = 16, per_client: int = 25,
-          size: int = 256, window_ms: int = 5) -> None:
+          size: int = 256) -> None:
     """Concurrent write flood through GROUP COMMIT — the reference
     testclient runs wrfl with --clients concurrent connections and the
     server's RequestManager batches them into shared storage writes;
-    here the writer's collector gathers concurrent append() calls into
-    one parquet commit per window."""
+    here append() calls that queue while a commit is in flight land in
+    the next commit file. Also prints how many commit files it took."""
     import threading
 
-    shutil.rmtree(WORKDIR, ignore_errors=True)
-    w = EventLogWriter(spark, WORKDIR, group_commit_window_ms=window_ms)
+    w = _fresh_writer(spark)
     payload = '{"d": "' + "x" * max(size - 10, 1) + '"}'
     t0 = time.time()
 
@@ -76,6 +77,7 @@ def wrflg(spark, clients: int = 16, per_client: int = 25,
     for t in threads:
         t.join()
     _report("wrflg", clients * per_client, t0)
+    print(f"wrflg: {len(manifest.data_files(WORKDIR))} commit files")
     n = w.load().count()
     assert n == clients * per_client, f"wrflg wrote {n}"
     w.close()
